@@ -46,6 +46,7 @@ def keep_last(
     order: tuple[str, ...] = ("op_ts", "seq"),
     broadcast_winner_rows: int = 8_000_000,
     checkpoint_input: bool = False,
+    max_rows: int | None = None,
 ) -> DataFrame:
     """Reduce to one row per pk — the max by lexicographic (order...).
 
@@ -94,6 +95,14 @@ def keep_last(
     which materializes the tagged rows once (``localCheckpoint``) so both
     traversals read the same physical rows. ``LakeTable.merge`` does.
     The window fallback is a single traversal and has no such contract.
+
+    ``max_rows``: a known upper bound on the input row count (e.g. the
+    row counts a lake manifest records per file). At or below
+    ``broadcast_winner_rows`` the winner count cannot exceed the cap, so
+    the fast path is built lazily: no winner checkpoint, no count — the
+    narrow aggregate and its broadcast run inside the caller's action,
+    and every consumer of the result shares the one aggregate through
+    Spark's exchange reuse.
     """
     rid = "_cj_rid"
     tagged = df.withColumn(rid, F.monotonically_increasing_id())
@@ -104,16 +113,18 @@ def keep_last(
         tagged.groupBy(*pk)
         .agg(F.max(packed).alias("_w"))
         .select(F.col(f"_w.{rid}").alias(rid))
-        .localCheckpoint(eager=True)
     )
-    if wins.count() > broadcast_winner_rows:
-        # tagged is already materialized when checkpoint_input was set;
-        # the window pass is single-traversal so plain df is fine otherwise
-        src = tagged.drop(rid) if checkpoint_input else df
-        out_cols = [c for c in df.columns if c not in pk]
-        return keep_last_window(src, pk=pk, order=order).select(*pk, *out_cols)
-    surv = tagged.join(F.broadcast(wins), on=rid, how="left_semi").drop(rid)
     out_cols = [c for c in df.columns if c not in pk]
+    if max_rows is None or max_rows > broadcast_winner_rows:
+        wins = wins.localCheckpoint(eager=True)
+        if wins.count() > broadcast_winner_rows:
+            # tagged is already materialized when checkpoint_input was
+            # set; the window pass is single-traversal so plain df is
+            # fine otherwise
+            src = tagged.drop(rid) if checkpoint_input else df
+            return keep_last_window(src, pk=pk, order=order).select(
+                *pk, *out_cols)
+    surv = tagged.join(F.broadcast(wins), on=rid, how="left_semi").drop(rid)
     return surv.select(*pk, *out_cols)
 
 

@@ -31,9 +31,10 @@ Scale design
   when base buckets are rewritten (merge/compact), never per delta.
 
 Hashing uses Spark's own ``xxhash64`` computed BY SPARK on both the
-harvest and probe sides (the probe hashes literal values through a
-1-row job with the column's current type), so driver and executor can
-never disagree — same rule as ``LakeTable._buckets_for_key_tuples``.
+harvest and probe sides (the probe evaluates the hash over literal
+values with the column's current type, folded on the driver by
+``lake.literal_rows``), so driver and executor can never disagree —
+same rule as ``LakeTable._buckets_for_key_tuples``.
 Double-hash scheme (Kirsch-Mitzenmacher): position_i = (h1 + i*h2) mod m
 with h1 = xxhash64(col), h2 = xxhash64(col, SEED2).
 
@@ -83,14 +84,18 @@ def _positions(h1: F.Column, h2: F.Column, n_bits: int, k: int) -> F.Column:
     return F.array(*[F.pmod(h1 + F.lit(i) * h2, m) for i in range(int(k))])
 
 
+# position p → (lane, bit) — shiftleft with a column shift amount needs
+# the SQL form (the PySpark wrapper only takes a literal)
+_LANE_SQL = "CAST(p DIV 64 AS INT)"
+_BIT_SQL = "shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))"
+
+
 def _lane_mask(df: DataFrame) -> DataFrame:
-    """p (position) → (lane, bit) — shiftleft with a column shift amount
-    needs the SQL form (the PySpark wrapper only takes a literal)."""
     return df.select(
         "bucket",
         "fid",
-        F.expr("CAST(p DIV 64 AS INT)").alias("lane"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").alias("bit"),
+        F.expr(_LANE_SQL).alias("lane"),
+        F.expr(_BIT_SQL).alias("bit"),
     )
 
 
@@ -305,30 +310,34 @@ def _value_lane_pairs(
     n_bits: int, k: int,
 ) -> tuple[dict[int, list], list[int]]:
     """Per-value (lane, mask) probe pairs, hashed BY SPARK with the
-    column's current type — one |values|-row job, no table IO."""
-    pv = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(values)],
+    column's current type over an inline literal relation
+    (``literal_rows``: folded on the driver, no Spark job, no table IO).
+    The lane/mask split stays an array ``transform`` — an ``explode``
+    would block the driver-side folding."""
+    from chunjun_spark.plans.lake import literal_rows
+
+    pv = literal_rows(
+        spark,
         T.StructType(
             [T.StructField("i", T.IntegerType()),
              T.StructField("v", col_type)]
         ),
+        list(enumerate(values)),
     )
     h1, h2 = _h_cols(F.col("v"), n_bits)
-    pairs = (
-        pv.select("i", F.explode(_positions(h1, h2, n_bits, k)).alias("p"))
-        .select(
-            "i",
-            F.expr("CAST(p DIV 64 AS INT)").alias("lane"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))"
-            ).alias("mask"),
-        )
-        .collect()
-    )
-    by_value: dict[int, list] = {}
-    for r in pairs:
-        by_value.setdefault(r["i"], []).append((r["lane"], r["mask"]))
-    return by_value, sorted({r["lane"] for r in pairs})
+    rows = pv.select(
+        "i", _positions(h1, h2, n_bits, k).alias("ps")
+    ).select(
+        "i",
+        F.expr(
+            f"transform(ps, p -> named_struct('lane', {_LANE_SQL}, "
+            f"'mask', {_BIT_SQL}))"
+        ).alias("pairs"),
+    ).collect()
+    by_value: dict[int, list] = {
+        r["i"]: [(q["lane"], q["mask"]) for q in r["pairs"]] for r in rows
+    }
+    return by_value, sorted({ln for pl in by_value.values() for ln, _ in pl})
 
 
 def probe_fragments(
@@ -348,9 +357,9 @@ def probe_fragments(
     always sound, and it lets the whole probe be ONE filtered read over
     all fragment files (row-group-pruned by the lane predicate).
 
-    Cost: one |values|-row hash job + one read of k·|values| lanes
-    across the fragments; ≤ |covered| × k × |values| narrow rows reach
-    the driver.
+    Cost: the probe positions are folded on the driver (no job), then
+    one read of k·|values| lanes across the fragments; ≤ |covered| × k
+    × |values| narrow rows reach the driver.
     """
     if not paths or not values or not covered:
         return set(covered)

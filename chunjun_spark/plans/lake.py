@@ -46,6 +46,7 @@ from scratch with the same guarantees the north rule needs:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -72,6 +73,8 @@ VTS_COL = "_vts"
 VSEQ_COL = "_vseq"
 DELETED_COL = "_deleted"
 _HIDDEN = [VTS_COL, VSEQ_COL, DELETED_COL]
+_HIDDEN_TYPES = [(VTS_COL, "timestamp"), (VSEQ_COL, "bigint"),
+                 (DELETED_COL, "boolean")]
 
 
 def follow_changes(
@@ -199,8 +202,39 @@ class _Schema:
         raise ValueError(f"no column {name}")
 
 
+@functools.lru_cache(maxsize=None)
 def _parse_type(ddl: str) -> T.DataType:
+    # memoized: each parse is a JVM round trip, and read planning maps
+    # every column of every file it opens through here
     return T.StructType.fromDDL(f"x {ddl}")[0].dataType
+
+
+def literal_rows(
+    spark: SparkSession, struct: T.StructType, rows: list
+) -> DataFrame:
+    """``rows`` as an inline ``VALUES`` relation typed by ``struct`` —
+    the one place literal values are evaluated through Spark (bucket
+    hashes, partition transforms, bloom probe positions): the hash MUST
+    be Spark's own, computed by the expression that wrote the data,
+    never re-implemented driver-side. Each cell is a bound parameter
+    cast to its column type, so the relation resolves to a
+    LocalRelation; a projection of deterministic expressions over it is
+    folded on the driver and collected without a Spark job. ``rows``
+    must be non-empty (``VALUES`` needs a row)."""
+    args: dict = {}
+    tuples = []
+    for i, row in enumerate(rows):
+        cells = []
+        for j, (f, v) in enumerate(zip(struct.fields, row)):
+            args[f"p{i}_{j}"] = v
+            cells.append(f"CAST(:p{i}_{j} AS {f.dataType.simpleString()})")
+        tuples.append(f"({', '.join(cells)})")
+    names = ", ".join(
+        "`" + f.name.replace("`", "``") + "`" for f in struct.fields
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})", args=args
+    )
 
 
 # derived-partition exprs whose [lo, hi] over the source bounds provably
@@ -630,10 +664,64 @@ class LakeTable:
             o = old.get(f["id"])
             if o is None:
                 cols.append(F.lit(None).cast(_parse_type(f["type"])).alias(f["name"]))
-            else:
+            elif o["type"] != f["type"]:
                 cols.append(F.col(o["name"]).cast(_parse_type(f["type"])).alias(f["name"]))
+            else:
+                # files are read with their manifest types, so an
+                # unchanged column needs no cast (fewer JVM round trips
+                # per planned read)
+                cols.append(F.col(o["name"]).alias(f["name"])
+                            if o["name"] != f["name"] else f["name"])
         extra = [c for c in (_BUCKET_COL, OP_COL, *_HIDDEN) if c in df.columns]
         return df.select(*cols, *extra)
+
+    def _file_struct(self, sv: int, kind: str) -> T.StructType:
+        """Physical columns of a lake file written under schema version
+        ``sv``, derived from the manifest alone — reads pass it to
+        ``spark.read.schema`` so opening a file never runs a Spark
+        schema-inference job. ``kind``:
+
+        - ``base``: the schema's fields plus the hidden version columns.
+          The bucket and derived-partition columns live in directory
+          names, not in the files; a partitioned read discovers them
+          from the paths with the same types inference gives them.
+        - ``delta``: the prepared change row (``_prep_changes``):
+          fields, ``_op``, hidden columns, ``_bucket``.
+        - ``delete``: the current pk mapped by field id to its name
+          under ``sv`` (a renamed pk keeps deleting), the version pair
+          and ``_bucket``. A pk field the file cannot hold raises — the
+          entries would otherwise silently delete nothing."""
+        fields = self.manifest["schemas"][str(sv)]
+        if kind == "delete":
+            by_id = {f["id"]: f for f in fields}
+            cur = {f["name"]: f["id"] for f in self.schema.fields}
+            cols = []
+            for c in self.pk:
+                o = by_id.get(cur.get(c))
+                if o is None:
+                    raise ValueError(
+                        f"delete file under schema v{sv} has no column "
+                        f"for pk field {c!r}"
+                    )
+                cols.append((o["name"], o["type"]))
+            cols += [*_HIDDEN_TYPES[:2], (_BUCKET_COL, "int")]
+        elif kind == "delta":
+            cols = [(f["name"], f["type"]) for f in fields]
+            cols += [(OP_COL, "string"), *_HIDDEN_TYPES, (_BUCKET_COL, "int")]
+        else:
+            cols = [(f["name"], f["type"]) for f in fields] + _HIDDEN_TYPES
+        return T.StructType(
+            [T.StructField(n, _parse_type(t), True) for n, t in cols]
+        )
+
+    def _read_files(self, paths: list[str], sv: int, kind: str,
+                    base_path: str | None = None) -> DataFrame:
+        """The one reader of lake data files (base, delta, delete):
+        schema from ``_file_struct``, so it launches no Spark job."""
+        r = self.spark.read.schema(self._file_struct(sv, kind))
+        if base_path is not None:
+            r = r.option("basePath", base_path)
+        return r.parquet(*paths)
 
     def _read_base(
         self,
@@ -669,9 +757,10 @@ class LakeTable:
         parts = []
         for (sv, verdir), paths in sorted(by_sv.items()):
             if partitioned:
-                df = self.spark.read.option(
-                    "basePath", os.path.join(self.root, verdir)
-                ).parquet(*paths)
+                df = self._read_files(
+                    paths, sv, "base",
+                    base_path=os.path.join(self.root, verdir),
+                )
                 for c, (lo, hi) in (part_bounds or {}).items():
                     if c in df.columns:
                         dt = df.schema[c].dataType
@@ -681,7 +770,7 @@ class LakeTable:
                             )
                         )
             else:
-                df = self.spark.read.parquet(*paths)
+                df = self._read_files(paths, sv, "base")
             parts.append(self._align(df, sv))
         if not parts:
             return self.spark.createDataFrame([], self._struct_with_bucket())
@@ -695,24 +784,20 @@ class LakeTable:
         return out
 
     def _struct_with_bucket(self) -> T.StructType:
-        st = self.schema.to_struct()
+        st = self._file_struct(self.manifest["schema_version"], "base")
         return T.StructType(
-            list(st.fields)
-            + [
-                T.StructField(VTS_COL, T.TimestampType()),
-                T.StructField(VSEQ_COL, T.LongType()),
-                T.StructField(DELETED_COL, T.BooleanType()),
-                T.StructField(_BUCKET_COL, T.IntegerType()),
-            ]
+            list(st.fields) + [T.StructField(_BUCKET_COL, T.IntegerType())]
         )
 
     def _write_delete_file(self, dels: DataFrame, m: dict) -> dict | None:
         """Write one narrow (pk, version, bucket) equality-delete file
         for manifest ``m``'s version — the single writer all three
-        producers (merge, full compact, partial compact) share. Count +
-        touched-bucket set ride the write action (Observation); an empty
-        frame leaves NO dir behind (a rowless parquet dir throws
-        UNABLE_TO_INFER_SCHEMA on read) and returns None."""
+        producers (merge, full compact, partial compact) share. Row
+        count + touched-bucket set ride the write action (Observation)
+        and land in the entry (``n`` bounds the resolve's broadcast
+        side without a count job); an empty frame leaves NO dir behind
+        (a rowless parquet dir throws UNABLE_TO_INFER_SCHEMA on read)
+        and returns None."""
         drel = os.path.join(
             "data", f"v{m['version']}-del-{uuid.uuid4().hex[:8]}"
         )
@@ -724,7 +809,8 @@ class LakeTable:
             F.count(F.lit(1)).alias("n"),
             F.collect_set(F.col(_BUCKET_COL)).alias("touched"),
         ).write.mode("overwrite").parquet(os.path.join(self.root, drel))
-        if not int(dobs.get["n"]):
+        n = int(dobs.get["n"])
+        if not n:
             shutil.rmtree(os.path.join(self.root, drel),
                           ignore_errors=True)
             return None
@@ -732,6 +818,7 @@ class LakeTable:
             "path": drel,
             "schema_version": m["schema_version"],
             "buckets": sorted(int(b) for b in dobs.get["touched"]),
+            "n": n,
         }
 
     @property
@@ -742,57 +829,44 @@ class LakeTable:
     def delete_files(self) -> list[dict]:
         return self.manifest.get("delete_files", [])
 
-    def _delete_file_parts(
-        self, buckets: list[int] | None, widen: bool = True
-    ) -> list[DataFrame]:
-        """Equality-delete files projected for resolve: pk columns
+    def _delete_file_parts(self, buckets: list[int] | None) -> list[tuple]:
+        """Equality-delete files projected for resolve, as
+        ``(frame, recorded n)`` pairs of narrow (pk, _vts, _vseq,
+        _deleted=True, _bucket) rows — a tombstone ROW minus its payload
+        columns, which the resolve's by-name unions fill with NULL, so
+        the change-winner fold needs no special casing. pk columns are
         mapped by field id to the current schema (a renamed pk column
-        keeps deleting). ``widen=True`` expands to full resolve width
-        (every payload column NULL, ``_deleted=True`` — exactly the
-        shape a tombstone ROW has, so the keep-last fold needs no
-        special casing); ``widen=False`` keeps the narrow
-        (pk, _vts, _vseq, _bucket) shape the anti-join path consumes.
-        Narrow IO either way: each file holds only the narrow columns.
+        keeps deleting; an unmappable one raises in ``_file_struct``).
         Bucket pruning by the recorded per-file bucket set is sound
         (bucket is a pure key hash)."""
         want = {int(b) for b in buckets} if buckets is not None else None
         out = []
-        cur_fields = self.schema.fields
-        pk = set(self.pk)
+        cur = {f["name"]: f for f in self.schema.fields}
         for d in self.delete_files:
             tb = d.get("buckets")
             if want is not None and tb is not None \
                     and not (want & {int(b) for b in tb}):
                 continue
-            df = self.spark.read.parquet(os.path.join(self.root, d["path"]))
+            sv = d["schema_version"]
+            df = self._read_files(
+                [os.path.join(self.root, d["path"])], sv, "delete"
+            )
             if buckets is not None:
                 df = df.filter(
                     F.col(_BUCKET_COL).isin([int(b) for b in buckets])
                 )
-            old = {f["id"]: f
-                   for f in self.manifest["schemas"][str(d["schema_version"])]}
-            in_file = set(df.columns)
-            cols = []
-            for f in cur_fields:
-                o = old.get(f["id"])
-                mapped = o is not None and o["name"] in in_file
-                if not widen and f["name"] not in pk:
-                    continue
-                if mapped:
-                    cols.append(
-                        F.col(o["name"]).cast(_parse_type(f["type"]))
-                        .alias(f["name"])
-                    )
-                elif widen:
-                    cols.append(
-                        F.lit(None).cast(_parse_type(f["type"]))
-                        .alias(f["name"])
-                    )
-            sel = [*cols, F.col(VTS_COL), F.col(VSEQ_COL)]
-            if widen:
-                sel.append(F.lit(True).alias(DELETED_COL))
-            sel.append(F.col(_BUCKET_COL))
-            out.append(df.select(*sel))
+            old = {f["id"]: f for f in self.manifest["schemas"][str(sv)]}
+            pk_cols = []
+            for c in self.pk:
+                o = old[cur[c]["id"]]
+                col = F.col(o["name"])
+                if o["type"] != cur[c]["type"]:
+                    col = col.cast(_parse_type(cur[c]["type"]))
+                pk_cols.append(col.alias(c) if o["name"] != c else col)
+            out.append((df.select(
+                *pk_cols, VTS_COL, VSEQ_COL,
+                F.lit(True).alias(DELETED_COL), _BUCKET_COL,
+            ), d.get("n")))
         return out
 
     @staticmethod
@@ -806,52 +880,13 @@ class LakeTable:
             return None
         return {int(b) for b in tb} - {int(b) for b in d.get("exclude_buckets", [])}
 
-    def _resolve(
-        self,
-        buckets: list[int] | None = None,
-        part_bounds: dict | None = None,
-        with_delete_files: bool = True,
-    ) -> DataFrame:
-        """base ⊕ deltas ⊕ equality-delete entries reduced to one row per
-        pk by the (op_ts, seq) version order; tombstones retained
-        (callers filter).
-
-        ``part_bounds`` (directory pruning on derived partitions) is
-        honored only when no relevant delta OR delete file remains —
-        otherwise a key's winner may sit outside the pruned range while
-        a stale version sits inside it, and pruning would surface the
-        stale row. Same soundness contract as stats pruning; the
-        caller's residual filter keeps the fallback correct.
-
-        ``with_delete_files=False`` folds base ⊕ deltas only, leaving
-        the delete files AUTHORITATIVE on top (partial compaction uses
-        it: the rewritten buckets stay shadowed by the untouched delete
-        files at read time, instead of duplicating entries into rows)."""
-        deltas = self.manifest["deltas"]
-        has_dfiles = bool(with_delete_files and self.delete_files)
-        if not deltas and not has_dfiles:
-            return self._read_base(buckets, part_bounds)
-        if not deltas and has_dfiles:
-            # base + delete files only: the anti-join plan — the wide
-            # base payload stays MAP-ONLY (the narrow entry winners
-            # broadcast) instead of shuffling through keep_last. The
-            # common steady-state read between compactions under COW
-            # churn, and the plan shape Iceberg v2 readers use for
-            # equality deletes.
-            out = self._resolve_base_anti_deletes(buckets, part_bounds)
-            if out is not None:
-                return out
-            # entry count above the broadcast cap — fall through to the
-            # single-shuffle fold below
-        dparts = (
-            self._delete_file_parts(buckets) if with_delete_files else []
-        )
-        if not deltas and not dparts:
-            # every delete file bucket-pruned away for this probe
-            return self._read_base(buckets, part_bounds)
-        delta_parts = []
+    def _delta_parts(self, buckets: list[int] | None) -> list[tuple]:
+        """Outstanding delta files projected to the current schema, as
+        ``(frame, recorded n)`` pairs, skipping files that cannot hold a
+        probed key."""
+        out = []
         want = {int(b) for b in buckets} if buckets is not None else None
-        for d in deltas:
+        for d in self.manifest["deltas"]:
             live = self._delta_live_buckets(d)
             if live is not None and not live:
                 # every touched bucket folded out by partial compactions;
@@ -862,7 +897,10 @@ class LakeTable:
                 # disjoint from the probe cannot hold any probed key's
                 # version (bucket is a pure key hash) — don't open it
                 continue
-            df = self.spark.read.parquet(os.path.join(self.root, d["path"]))
+            df = self._read_files(
+                [os.path.join(self.root, d["path"])], d["schema_version"],
+                "delta",
+            )
             excl = d.get("exclude_buckets")
             if excl:
                 # rows in these buckets were rewritten into the base by a
@@ -871,107 +909,105 @@ class LakeTable:
                 df = df.filter(~F.col(_BUCKET_COL).isin([int(b) for b in excl]))
             if buckets is not None:
                 df = df.filter(F.col(_BUCKET_COL).isin([int(b) for b in buckets]))
-            delta_parts.append(self._align(df, d["schema_version"]).drop(OP_COL))
-        delta_parts.extend(dparts)
-        if not delta_parts:
-            # every delta and delete file skipped for the probed buckets
-            # — the base is authoritative and directory pruning is
-            # sound again
-            return self._read_base(buckets, part_bounds)
-        base = self._read_base(buckets)
-        delta = delta_parts[0]
-        for p in delta_parts[1:]:
-            delta = delta.unionByName(p)
-        return keep_last(
-            base.unionByName(delta), pk=self.pk, order=(VTS_COL, VSEQ_COL)
-        )
+            out.append((self._align(df, d["schema_version"]).drop(OP_COL),
+                        d.get("n")))
+        return out
 
-    # above this many delete-entry winners the broadcast build risks the
-    # same OOM the keep_last winner-broadcast hit at 25M rows on an 8g
-    # heap (measured cap 8M; entries here carry pk + 2 version cols, a
-    # similar narrow shape)
+    # above this many change rows (delta rows + delete entries) the
+    # broadcast build risks the same OOM the keep_last winner-broadcast
+    # hit at 25M rows on an 8g heap (measured cap 8M; the broadcast
+    # sides here carry pk + 2 version cols, a similar narrow shape)
     _DELETE_BROADCAST_CAP = 8_000_000
 
-    def _resolve_base_anti_deletes(
+    def _resolve(
         self,
-        buckets: list[int] | None,
-        part_bounds: dict | None,
-    ) -> DataFrame | None:
-        """Deltas-free resolve with equality-delete files applied as a
-        BROADCAST ANTI-JOIN over the base instead of a keep-last
-        shuffle. Returns None when the entry count exceeds the
-        broadcast cap (caller falls back to the fold).
+        buckets: list[int] | None = None,
+        part_bounds: dict | None = None,
+        with_delete_files: bool = True,
+    ) -> DataFrame:
+        """base ⊕ deltas ⊕ equality-delete entries reduced to one row per
+        pk by the (op_ts, seq) version order; tombstones retained
+        (callers filter). Builds the plan without running a Spark job.
 
-        Semantics (== the keep-last fold): a base row is dropped iff
-        some entry for its pk has version >= the row's; an entry
-        survives as the pk's tombstone winner iff no base row is
-        strictly newer. Ties go to the delete entry — deterministic,
-        and reachable only on contract-violating duplicate versions.
-        ``part_bounds`` stays SOUND here, unlike the delta fold: the
-        base holds at most one row per pk (COW invariant), so no stale
-        in-range version can shadow an out-of-range winner; entries
-        only remove rows."""
-        ents = self._delete_file_parts(buckets, widen=False)
-        if not ents:
-            # every delete file bucket-pruned away for this probe
+        Plan (the shape Iceberg v2 readers use for equality deletes,
+        applied to MOR deltas too): the CHANGE side — delta rows and
+        delete entries, whose row counts the manifest records — folds to
+        one winner per pk (keep_last's narrow aggregate + broadcast
+        semi-join); the winners apply to the base as broadcast joins, so
+        the wide base payload stays MAP-ONLY. A base row is dropped iff
+        its pk's change winner has version >= the row's; a change winner
+        survives iff no base row is strictly newer. Ties go to the
+        change side, exactly as in a keep-last fold over base ⊕ changes
+        (the base holds at most one row per pk — the COW invariant).
+        Above ``_DELETE_BROADCAST_CAP`` change rows, or when a file has
+        no recorded row count (older manifests), it falls back to that
+        single-shuffle fold over base ⊕ changes.
+
+        ``part_bounds`` (directory pruning on derived partitions) prunes
+        the base side of the winner plan: entries only remove base rows
+        and a surviving winner is checked against the UNPRUNED base, so
+        no stale in-range version can shadow an out-of-range winner. The
+        fold ignores it (a key's winner may sit outside the pruned range
+        while a stale version sits inside it); the caller's residual
+        filter keeps either plan correct.
+
+        ``with_delete_files=False`` folds base ⊕ deltas only, leaving
+        the delete files AUTHORITATIVE on top (partial compaction uses
+        it: the rewritten buckets stay shadowed by the untouched delete
+        files at read time, instead of duplicating entries into rows)."""
+        parts = self._delta_parts(buckets)
+        if with_delete_files:
+            parts += self._delete_file_parts(buckets)
+        if not parts:
+            # every delta and delete file skipped for the probed buckets
+            # — the base is authoritative and directory pruning is sound
             return self._read_base(buckets, part_bounds)
-        ent = ents[0]
-        for p in ents[1:]:
-            ent = ent.unionByName(p)
-        # one narrow scan bounds the build side BEFORE any broadcast
-        if ent.count() > self._DELETE_BROADCAST_CAP:
-            return None
-        # one winner per pk among the entries (consolidation may be
-        # pending; narrow frame — the one small shuffle of this plan)
-        ew = keep_last(ent, pk=self.pk, order=(VTS_COL, VSEQ_COL))
-        ew = ew.select(
-            *self.pk,
-            F.col(VTS_COL).alias("_d_vts"),
-            F.col(VSEQ_COL).alias("_d_vseq"),
-            F.col(_BUCKET_COL).alias("_d_bucket"),
-        ).localCheckpoint(eager=True)  # two consumers below
-        base = self._read_base(buckets, part_bounds)
-        shadowed = F.col("_d_vseq").isNotNull() & (
-            F.struct(F.col("_d_vts"), F.col("_d_vseq"))
-            >= F.struct(F.col(VTS_COL), F.col(VSEQ_COL))
-        )
-        kept = (
-            base.join(F.broadcast(ew.drop("_d_bucket")), on=self.pk,
-                      how="left")
-            .filter(~shadowed)
-            .drop("_d_vts", "_d_vseq")
-        )
-        # surviving tombstone winners: no strictly-newer base row —
-        # the base side is a COLUMN-PRUNED (pk, version) scan
-        base_narrow = self._read_base(buckets).select(
-            *self.pk,
-            F.col(VTS_COL).alias("_b_vts"),
-            F.col(VSEQ_COL).alias("_b_vseq"),
-        )
-        surv = (
-            ew.join(base_narrow, on=self.pk, how="left")
-            .filter(
-                F.col("_b_vseq").isNull()
-                | (
-                    F.struct(F.col("_b_vts"), F.col("_b_vseq"))
-                    <= F.struct(F.col("_d_vts"), F.col("_d_vseq"))
-                )
+        pk, order = self.pk, (VTS_COL, VSEQ_COL)
+        # by-name unions fill a delete entry's missing payload with NULL
+        changes = parts[0][0]
+        for p, _ in parts[1:]:
+            changes = changes.unionByName(p, allowMissingColumns=True)
+        counts = [n for _, n in parts]
+        n_rows = None if None in counts else sum(counts)
+        base = self._read_base(buckets)
+        if n_rows is None or n_rows > self._DELETE_BROADCAST_CAP:
+            return keep_last(
+                base.unionByName(changes, allowMissingColumns=True),
+                pk=pk, order=order,
             )
+        # one winner per pk among the change rows; n_rows bounds the
+        # winner count, so the fold stays lazy (no checkpoint, no count)
+        cw = keep_last(changes, pk=pk, order=order,
+                       broadcast_winner_rows=self._DELETE_BROADCAST_CAP,
+                       max_rows=n_rows)
+        # ONE broadcast frame for both base-side joins (exchange reuse)
+        cw_ver = F.broadcast(cw.select(
+            *pk,
+            F.col(VTS_COL).alias("_c_vts"),
+            F.col(VSEQ_COL).alias("_c_vseq"),
+            F.lit(True).alias("_c_hit"),
+        ))
+        change_ver = F.struct(F.col("_c_vts"), F.col("_c_vseq"))
+        base_ver = F.struct(F.col(VTS_COL), F.col(VSEQ_COL))
+        kept = (
+            (base if part_bounds is None
+             else self._read_base(buckets, part_bounds))
+            .join(cw_ver, on=pk, how="left")
+            .filter(~(F.col("_c_hit").isNotNull() & (change_ver >= base_ver)))
+            .drop("_c_vts", "_c_vseq", "_c_hit")
         )
-        pk_set = set(self.pk)
-        surv_wide = surv.select(
-            *[
-                F.col(f["name"]) if f["name"] in pk_set
-                else F.lit(None).cast(_parse_type(f["type"]))
-                .alias(f["name"])
-                for f in self.schema.fields
-            ],
-            F.col("_d_vts").alias(VTS_COL),
-            F.col("_d_vseq").alias(VSEQ_COL),
-            F.lit(True).alias(DELETED_COL),
-            F.col("_d_bucket").alias(_BUCKET_COL),
+        # pks whose base row is strictly newer than the change winner:
+        # the base side streams a COLUMN-PRUNED (pk, version) scan
+        # against the broadcast winners, so the build side is the small
+        # change side at any base size
+        newer = (
+            base.select(*pk, VTS_COL, VSEQ_COL)
+            .join(cw_ver, on=pk, how="inner")
+            .filter(base_ver > change_ver)
+            .select(*pk)
         )
-        return kept.unionByName(surv_wide)
+        surv = cw.join(F.broadcast(newer), on=pk, how="left_anti")
+        return kept.unionByName(surv, allowMissingColumns=True)
 
     def read(
         self,
@@ -997,22 +1033,24 @@ class LakeTable:
     def _buckets_for_key_tuples(self, eq_values: dict[str, list]) -> list[int]:
         """Bucket ids for the cross product of per-bucket-column literal
         lists — the Iceberg bucket-transform partition-pruning analog
-        (superset of the actual tuples, so always sound). One Spark job of
-        |combinations| rows (no table IO): the hash MUST be Spark's own
-        xxhash64, computed by the same expression that wrote the data
-        rather than re-implemented driver-side."""
+        (superset of the actual tuples, so always sound). The hash is
+        Spark's own xxhash64, the expression that wrote the data,
+        evaluated over the literals on the driver (``literal_rows``: no
+        Spark job, no table IO)."""
         import itertools
 
         types = {f["name"]: f["type"] for f in self.schema.fields}
         cols = self.bucket_cols
         combos = list(itertools.product(*[eq_values[c] for c in cols]))
-        df = self.spark.createDataFrame(
-            combos,
+        if not combos:
+            return []
+        rows = literal_rows(
+            self.spark,
             T.StructType(
                 [T.StructField(c, _parse_type(types[c])) for c in cols]
             ),
-        )
-        rows = df.select(
+            combos,
+        ).select(
             F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(self.n_buckets))
             .cast("int")
             .alias("b")
@@ -1144,10 +1182,11 @@ class LakeTable:
     ) -> dict | None:
         """[lo, hi] on each derived partition column implied by the
         caller's predicates on its source column, or None. The spec expr
-        is evaluated over the two bound literals through SPARK (a 2-row
-        job, no table IO) — never re-implemented driver-side — which is
-        correct for any monotonic transform (date_trunc, date_format
-        with ordered patterns, floor division)."""
+        is evaluated over the two bound literals through SPARK
+        (``literal_rows``: folded on the driver, no Spark job, no table
+        IO) — never re-implemented driver-side — which is correct for
+        any monotonic transform (date_trunc, date_format with ordered
+        patterns, floor division)."""
         specs = [p for p in self.partition_specs if p.get("source")]
         if not specs:
             return None
@@ -1182,17 +1221,14 @@ class LakeTable:
             # matching rows; skip pruning, the residual keeps it exact
             if not _monotonic_partition_expr(p["expr"], s):
                 continue
-            src_t = _parse_type(types[s])
-            probe = self.spark.range(1).select(
-                F.explode(
-                    F.array(F.lit(lo).cast(src_t), F.lit(hi).cast(src_t))
-                ).alias(s)
-            )
             try:
                 vals = [
                     r["v"]
-                    for r in probe.select(
-                        F.expr(p["expr"]).alias("v")).collect()
+                    for r in literal_rows(
+                        self.spark,
+                        T.StructType([T.StructField(s, _parse_type(types[s]))]),
+                        [(lo,), (hi,)],
+                    ).select(F.expr(p["expr"]).alias("v")).collect()
                 ]
             except Exception:
                 continue  # underivable expr: no pruning, residual holds
@@ -1698,18 +1734,20 @@ class LakeTable:
                 how="left_anti",
             )
             eq_del = self.equality_deletes and bool(del_buckets)
+            patched = (self._apply_patches(base, eff, small)
+                       if update_mode == "patch" else eff)
             if eq_del:
                 # TWO actions consume eff in this mode (base write +
                 # delete-file write) and eff embeds the stale-guard join
                 # against a base scan — cut it once (localCheckpoint,
-                # review r5 pass 2; same rule as the compact paths)
-                eff = eff.localCheckpoint(eager=True)
+                # review r5 pass 2; same rule as the compact paths),
+                # AFTER the patch join so neither write re-runs it
+                eff = patched = patched.localCheckpoint(eager=True)
             keys = eff.select(*self.pk)
             kept = base.join(F.broadcast(keys) if small else keys,
                              on=self.pk, how="left_anti")
             data_cols = [*self.schema.names(), *_HIDDEN, _BUCKET_COL]
-            if update_mode == "patch":
-                eff = self._apply_patches(base, eff, small)
+            eff = patched
             if eq_del:
                 # equality-delete mode: the rewritten base holds ONLY
                 # live rows; effective deletes go to a narrow
@@ -1863,7 +1901,7 @@ class LakeTable:
         n = int(obs.get["n"])
         touched = sorted(int(b) for b in obs.get["touched"])
         entry = {"path": rel, "schema_version": m["schema_version"],
-                 "batch_id": batch_id, "buckets": touched}
+                 "batch_id": batch_id, "buckets": touched, "n": n}
         if m.get("bloom_cols"):
             # per-delta bloom fragment (plans/bloom.py): point lookups
             # on indexed columns stay pruned while deltas are

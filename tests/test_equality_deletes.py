@@ -308,3 +308,186 @@ def test_streaming_replay_into_equality_delete_table(spark, tmp_path):
     assert eq._read_base().filter(
         F.coalesce(F.col(DELETED_COL), F.lit(False))).count() == 0
     assert eq.delete_files  # the churny stream produced delete entries
+
+
+def _plan_jobs(spark, build):
+    """(frame, Spark jobs launched while ``build()`` planned it)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"plan-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "read planning")
+    try:
+        df = build()
+    finally:
+        sc.setJobGroup(None, None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _churn(spark, t, mor: bool):
+    """Upserts, deletes and stale re-deliveries through merge (delete
+    files on an equality-delete table) or append_delta (MOR deltas)."""
+    t.merge(_mk(spark, [(k, "a", float(k), "UPSERT", k)
+                        for k in range(24)]), batch_id="b1",
+            assume_unique_keys=True)
+    write = ((lambda t, df, b: t.refresh().append_delta(df, batch_id=b))
+             if mor else
+             (lambda t, df, b: t.refresh().merge(df, batch_id=b,
+                                                 assume_unique_keys=True)))
+    write(t, _mk(spark, [(k, None, None, "DELETE", 100 + k)
+                         for k in range(0, 24, 3)]
+                 + [(k, "b", k * 2.0, "UPSERT", 100 + k)
+                    for k in range(1, 24, 3)]), "b2")
+    # revivals of deleted keys, a stale re-delivery and fresh keys
+    write(t, _mk(spark, [(0, "c", 0.5, "UPSERT", 300),
+                         (3, "c", 3.5, "UPSERT", 50),
+                         (30, "c", 30.0, "UPSERT", 301)]), "b3")
+    return t.refresh()
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor", "eqdel"])
+def test_read_planning_launches_no_spark_job(spark, tmp_path, mode):
+    """point_lookup, scan(eq=...) and read() build their plans without
+    a single Spark job — schemas come from the manifest, the change-side
+    bound from recorded row counts, bucket ids from a driver-folded
+    literal relation. All resolve work runs in the caller's action."""
+    t = LakeTable.create(spark, str(tmp_path / mode), SCHEMA, pk=["k"],
+                         n_buckets=4, equality_deletes=(mode == "eqdel"))
+    t = _churn(spark, t, mor=(mode == "mor"))
+    if mode == "mor":
+        assert t.manifest["deltas"]
+    if mode == "eqdel":
+        assert t.delete_files
+    for build in (lambda: t.point_lookup(1, 3),
+                  lambda: t.scan(eq={"k": [0, 4]}),
+                  lambda: t.scan(eq={"grp": "b"}),
+                  lambda: t.read()):
+        df, jobs = _plan_jobs(spark, build)
+        assert jobs == 0
+        df.collect()  # and the plan runs
+    live = {r["k"]: r for r in t.read().collect()}
+    assert 3 not in live and live[0]["grp"] == "c" and 30 in live
+    assert sorted(r["k"] for r in t.point_lookup(1, 3).collect()) == [1]
+
+
+@pytest.mark.parametrize("mor", [False, True])
+def test_change_winner_plan_matches_fold_at_cap_boundary(
+        spark, tmp_path, monkeypatch, mor):
+    """The broadcast change-winner plan (change rows <= the cap) and the
+    keep-last fold (above it, or files without a recorded row count)
+    resolve identical state, tombstones included."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, pk=["k"],
+                         n_buckets=4, equality_deletes=not mor)
+    t = _churn(spark, t, mor=mor)
+    entries = t.manifest["deltas"] + t.delete_files
+    n = sum(e["n"] for e in entries)
+    assert n > 0
+
+    def resolved():
+        return sorted(map(tuple, t._resolve().collect()))
+
+    def looked_up():
+        return sorted(map(tuple, t.point_lookup(0, 1, 3, 30).collect()))
+
+    def planning_jobs():
+        return _plan_jobs(spark, t._resolve)[1]
+
+    monkeypatch.setattr(LakeTable, "_DELETE_BROADCAST_CAP", n)
+    at_cap = (resolved(), looked_up())
+    assert planning_jobs() == 0  # the lazy change-winner plan
+    monkeypatch.setattr(LakeTable, "_DELETE_BROADCAST_CAP", n - 1)
+    above = (resolved(), looked_up())
+    assert planning_jobs() > 0  # the fold's eager winner count
+    monkeypatch.setattr(LakeTable, "_DELETE_BROADCAST_CAP", 8_000_000)
+    for e in entries:
+        del e["n"]  # an older manifest: no recorded row counts
+    unrecorded = (resolved(), looked_up())
+    assert planning_jobs() > 0
+    assert at_cap == above == unrecorded
+    assert at_cap[0] and at_cap[1]
+
+
+def test_unmappable_pk_in_delete_file_raises(spark, tmp_path):
+    """A delete file whose schema version cannot hold a current pk field
+    id must fail loudly — skipping the column would make its entries
+    silently delete nothing."""
+    eq, _ = _pair(spark, tmp_path)
+    eq.merge(_mk(spark, [(k, "a", float(k), "UPSERT", k)
+                         for k in range(6)]), batch_id="b1",
+             assume_unique_keys=True)
+    eq.refresh().merge(_mk(spark, [(2, None, None, "DELETE", 100)]),
+                       batch_id="b2", assume_unique_keys=True)
+    eq.refresh().apply_ddl("add_column", name="extra", type="string")
+    eq = eq.refresh()
+    sv = str(eq.delete_files[0]["schema_version"])
+    assert sv != str(eq.manifest["schema_version"])
+    # the file's (older) schema version re-ids the pk field: the
+    # current pk id no longer maps to any of the file's columns
+    eq.manifest["schemas"][sv] = [
+        dict(f, id=99) if f["name"] == "k" else f
+        for f in eq.manifest["schemas"][sv]
+    ]
+    with pytest.raises(ValueError, match="pk field 'k'"):
+        eq._delete_file_parts(None)
+    with pytest.raises(ValueError, match="pk field 'k'"):
+        eq.read()
+
+
+def test_patch_mode_merge_matches_row_mode(spark, tmp_path):
+    """update_mode='patch' on an equality-delete table (patch join ahead
+    of the one materialization that feeds both writes) lands the same
+    state as the row-tombstone table."""
+    eq, row = _pair(spark, tmp_path)
+    for t in (eq, row):
+        t.merge(_mk(spark, [(k, "a", float(k), "UPSERT", k)
+                            for k in range(12)]), batch_id="b1",
+                assume_unique_keys=True)
+        # null payload = unchanged; deletes + patches in one batch
+        t.refresh().merge(
+            _mk(spark, [(k, None, k * 5.0, "UPSERT", 100 + k)
+                        for k in range(0, 12, 2)]
+                + [(k, None, None, "DELETE", 100 + k)
+                   for k in range(1, 12, 4)]
+                + [(40, None, 4.0, "UPSERT", 140)]),
+            batch_id="b2", update_mode="patch")
+        t.refresh().merge(
+            _mk(spark, [(2, "z", None, "UPSERT", 200),
+                        (5, "r", None, "UPSERT", 201),
+                        (6, None, None, "DELETE", 202)]),
+            batch_id="b3", update_mode="patch")
+    assert eq.refresh().delete_files
+    got = _state(eq)
+    assert got == _state(row)
+    by_k = {r[0]: r for r in got}
+    assert by_k[0] == (0, "a", 0.0) and by_k[2] == (2, "z", 10.0)
+    assert by_k[5] == (5, "r", None) and 6 not in by_k and 1 not in by_k
+
+
+def test_literal_evaluation_launches_no_spark_job(spark, tmp_path):
+    """The three literal evaluators — bucket ids, partition bounds and
+    bloom probe positions — fold on the driver (inline VALUES relation)
+    and agree with Spark evaluating the same expressions over data."""
+    from chunjun_spark.plans import bloom
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"),
+        T.StructType([T.StructField("k", T.StringType()),
+                      T.StructField("ts", T.TimestampType())]),
+        pk=["k"], n_buckets=16,
+        partition_exprs=[("day", "date_trunc('day', ts)", "ts")])
+    keys = ["a", "b", "zz"]
+    buckets, jobs = _plan_jobs(spark, lambda: t._buckets_for_key_values(keys))
+    assert jobs == 0
+    want = {r[0] for r in spark.createDataFrame([(k,) for k in keys], "k string")
+            .select(F.pmod(F.xxhash64("k"), F.lit(16)).cast("int")).collect()}
+    assert set(buckets) == want
+    bounds, jobs = _plan_jobs(spark, lambda: t._partition_bounds(
+        None, {"ts": ("2024-01-05 10:00:00", "2024-01-07 23:00:00")}))
+    assert jobs == 0
+    assert [str(v) for v in bounds["_p_day"]] == [
+        "2024-01-05 00:00:00", "2024-01-07 00:00:00"]
+    (by_value, lanes), jobs = _plan_jobs(spark, lambda: bloom._value_lane_pairs(
+        spark, T.StringType(), keys, 1 << 20, 5))
+    assert jobs == 0
+    assert len(by_value) == 3 and all(len(p) == 5 for p in by_value.values())
+    assert lanes == sorted({ln for p in by_value.values() for ln, _ in p})

@@ -862,3 +862,100 @@ def test_metadata_tables_files_and_snapshots(spark, tmp_path):
     top = s.orderBy(F.col("version").desc()).first()
     assert top["version"] == t.manifest["version"]
     assert "d1" in top["batch_ids"]
+
+
+def _assert_file_structs(spark, t) -> int:
+    """Every file the snapshot references: the manifest-derived struct
+    equals what parquet schema inference reads from the file, and a
+    directory read through it (partition discovery included) equals the
+    inferred directory read. Returns the number of files checked."""
+    checked = 0
+    verdirs = {}
+    if t.partition_specs:
+        verdirs = {b: os.path.join(t.root, os.path.dirname(e["path"]))
+                   for b, e in t.manifest["buckets"].items()}
+    refs = [("base", e["path"], e["schema_version"], verdirs.get(b))
+            for b, e in t.manifest["buckets"].items()]
+    refs += [("delta", d["path"], d["schema_version"], None)
+             for d in t.manifest["deltas"]]
+    refs += [("delete", d["path"], d["schema_version"], None)
+             for d in t.delete_files]
+    for kind, rel, sv, verdir in refs:
+        d = os.path.join(t.root, rel)
+        want = t._file_struct(sv, kind)
+        for f in LakeTable._parquet_files_in(d):
+            assert want == spark.read.parquet(f).schema, (kind, f)
+            checked += 1
+        inferred = spark.read
+        if verdir is not None:
+            inferred = inferred.option("basePath", verdir)
+        assert (t._read_files([d], sv, kind, base_path=verdir).schema
+                == inferred.parquet(d).schema), (kind, d)
+    return checked
+
+
+def test_manifest_file_struct_matches_parquet_schema(spark, tmp_path):
+    """Reads take each file's schema from the manifest instead of a
+    schema-inference job; the derived struct must equal the inferred
+    one for every file kind — base (plain / partitioned), delta, delete
+    file, compacted base — across add_column, rename_column (pk and
+    payload) and widen_type."""
+    import pyspark.sql.types as T
+
+    from chunjun_spark.plans.lake import OP_COL, VSEQ_COL, VTS_COL
+
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("n", T.IntegerType()),
+        T.StructField("ts", T.TimestampNTZType()),
+    ])
+    plain = LakeTable.create(spark, str(tmp_path / "plain"), schema,
+                             pk=["k"], n_buckets=2, equality_deletes=True)
+    parted = LakeTable.create(
+        spark, str(tmp_path / "parted"), schema, pk=["k"], n_buckets=2,
+        equality_deletes=True,
+        partition_exprs=[("day", "date_trunc('day', ts)", "ts")])
+
+    def batch(t, keys, seq, op="UPSERT"):
+        cols = {f["name"]: f["type"] for f in t.schema.fields}
+        key = t.pk[0]
+        df = spark.range(0, len(keys)).withColumn(
+            key, F.element_at(F.array(*[F.lit(k) for k in keys]),
+                              (F.col("id") + 1).cast("int")))
+        for c, ty in cols.items():
+            if c == key:
+                continue
+            v = (F.expr("timestamp_ntz'2024-01-01' + make_interval("
+                        "0,0,0,0,0,0,id*7200)") if ty == "timestamp_ntz"
+                 else F.col("id").cast(ty))
+            df = df.withColumn(c, v)
+        return df.select(
+            *cols, F.lit(op).alias(OP_COL),
+            F.lit("2024-01-01").cast("timestamp").alias(VTS_COL),
+            (F.col("id") + seq).alias(VSEQ_COL))
+
+    def churn(t, seq):
+        """base rewrite + delete file + delta, then check every file
+        the snapshot references."""
+        t.refresh().merge(batch(t.refresh(), list(range(8)), seq),
+                          batch_id=f"u{seq}", assume_unique_keys=True)
+        t.refresh().merge(batch(t.refresh(), [seq % 8], seq + 50, "DELETE"),
+                          batch_id=f"d{seq}", assume_unique_keys=True)
+        t.refresh().append_delta(batch(t.refresh(), [1, 9], seq + 60),
+                                 batch_id=f"a{seq}")
+        return _assert_file_structs(spark, t.refresh())
+
+    checked = churn(parted, 100)
+    checked += churn(plain, 100)
+    plain.refresh().apply_ddl("add_column", name="extra", type="string")
+    plain.refresh().apply_ddl("rename_column", old="name", new="title")
+    plain.refresh().apply_ddl("rename_column", old="k", new="key")
+    checked += churn(plain, 200)
+    plain.refresh().apply_ddl("widen_type", name="n", type="bigint")
+    checked += churn(plain, 300)
+    for t in (plain, parted):
+        t.refresh().compact()
+        checked += _assert_file_structs(spark, t.refresh())
+    assert checked > 20
+    assert plain.refresh().read().count() > 0

@@ -959,12 +959,24 @@ def main() -> int:
     eqt = eqt.refresh()
     eqr = eqt.read()
     p = formatted(eqr)
+    # size estimates off: every join must still broadcast its SMALL
+    # side (the entry winners), never fall back to a sort-merge join
+    # against the base
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        p_no_auto = formatted(eqt.read())
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     all_ok &= audit(
         "equality_delete_anti_join_resolve",
         eqr,
         {
             "delete entries applied via broadcast join (no SortMergeJoin)":
                 "BroadcastHashJoin" in p and "SortMergeJoin" not in p,
+            "still broadcast-only with autoBroadcastJoinThreshold=-1 "
+            "(explicit small-side builds, incl. the survivor join)":
+                "BroadcastHashJoin" in p_no_auto
+                and "SortMergeJoin" not in p_no_auto,
             "no keep-last window over the payload":
                 "Window" not in p,
             # the surviving-entry side pays the plan's only exchanges:
@@ -973,6 +985,62 @@ def main() -> int:
             # Exchange's input by construction; count bounded)
             "exchange count bounded (narrow sides only)":
                 len(re.findall(r"\(\d+\) Exchange", p)) <= 4,
+        },
+        out,
+    )
+
+    # 25. MOR resolve with outstanding deltas: the change side (delta
+    #     rows) folds to winners that apply to the base by broadcast
+    #     joins — no base payload column feeds any exchange
+    mort = LakeTable.create(
+        spark, tempfile.mkdtemp(prefix="cj_audit_mor_"),
+        T.StructType([
+            T.StructField("k", T.LongType()),
+            T.StructField("payload", T.StringType()),
+        ]),
+        pk=["k"], n_buckets=4,
+    )
+    mort.merge(
+        spark.range(0, 2000).select(
+            F.col("id").alias("k"),
+            F.repeat(F.lit("x"), 64).alias("payload"),
+            F.lit("UPSERT").alias("_op"),
+            F.lit("2024-01-01").cast("timestamp").alias("_vts"),
+            F.col("id").alias("_vseq"),
+        ),
+        batch_id="m1", assume_unique_keys=True,
+    )
+    for i, op in enumerate(("UPSERT", "DELETE")):
+        mort.refresh().append_delta(
+            spark.range(i, 2000, 7).select(
+                F.col("id").alias("k"),
+                F.repeat(F.lit("y"), 64).alias("payload"),
+                F.lit(op).alias("_op"),
+                F.lit("2024-01-02").cast("timestamp").alias("_vts"),
+                (F.col("id") + 10_000 * (i + 1)).alias("_vseq"),
+            ),
+            batch_id=f"d{i}",
+        )
+    mort = mort.refresh()
+    morr = mort.read()
+    p = formatted(morr)
+    ex_inputs = re.findall(
+        r"\(\d+\) (?:Broadcast)?Exchange\nInput \[\d+\]: \[([^\]]*)\]", p
+    )
+    all_ok &= audit(
+        "mor_delta_resolve",
+        morr,
+        {
+            "deltas outstanding (the resolve path, not a plain scan)":
+                len(mort.manifest["deltas"]) == 2,
+            "no payload column in any Exchange input (base and delta "
+            "payloads stay map-only; only (pk, version, rid) narrow "
+            "sides shuffle or broadcast)":
+                bool(ex_inputs)
+                and not any("payload#" in inp for inp in ex_inputs),
+            "change winners applied via broadcast joins, no window":
+                "BroadcastHashJoin" in p and "SortMergeJoin" not in p
+                and "Window" not in p,
         },
         out,
     )
