@@ -51,12 +51,6 @@ def exact_avg(col, scale: int = 6, grid: int = GRID) -> Column:
     )
 
 
-def exact_mean_cols(col, grid: int = GRID) -> tuple[Column, Column]:
-    """(count, unrounded exact mean) — for callers that round later."""
-    n = F.count(F.lit(1))
-    return n, F.sum(micro(col, grid)).cast("double") / n / F.lit(float(grid))
-
-
 def micro_sql(expr: str, grid: int = GRID) -> str:
     """DuckDB mirror of :func:`micro` over any SQL expression."""
     return f"CAST(round(({expr}) * {grid}) AS BIGINT)"

@@ -74,13 +74,6 @@ def punct_ratio(col: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def uppercase_ratio(col: Column) -> Column:
-    n_upper = F.length(F.regexp_replace(col, r"[^A-Z]", ""))
-    return F.when(
-        F.length(col) > 0, n_upper.cast("double") / F.length(col).cast("double")
-    ).otherwise(F.lit(0.0))
-
-
 def stopword_ratio(col: Column, marker_regex: str | None = None) -> Column:
     """Fraction of tokens that are (English, by default) stopwords."""
     pat = marker_regex or LANG_MARKERS["en"]

@@ -1,5 +1,4 @@
-"""Skew handling: hot-key detection, salted two-phase aggregation,
-bucketed range repartitioning.
+"""Skew handling: hot-key detection and salted two-phase aggregation.
 
 Reference analog: none — ChunJun's CDC source is single-channel
 (BinlogInputFormat.java:148-151), so it never faces reducer skew. The
@@ -78,15 +77,3 @@ def two_phase_agg(
     return p1.groupBy(*keys).agg(
         *[e2.alias(name) for name, (_e1, e2) in aggs.items()]
     )
-
-
-def repartition_by_key_ranges(
-    df: DataFrame, keys: list[str], n_partitions: int
-) -> DataFrame:
-    """Bucketed key-range repartition (the north rule's "repartitioning by
-    bucketed key ranges keeps shuffle bounded"): range-partition on the
-    key tuple so each output partition holds a contiguous, balanced key
-    range — Spark samples the keys to build balanced boundaries, which
-    handles skewed distributions better than plain hashing for ordered
-    downstream consumers (e.g. sorted bucket files)."""
-    return df.repartitionByRange(n_partitions, *[F.col(k) for k in keys])

@@ -54,7 +54,7 @@ import time
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from chunjun_spark.operators.dedup import keep_last
@@ -924,86 +924,134 @@ class LakeTable:
         buckets: list[int] | None = None,
         part_bounds: dict | None = None,
         with_delete_files: bool = True,
+        tombstones: bool = True,
+        pk_eq: dict | None = None,
     ) -> DataFrame:
         """base ⊕ deltas ⊕ equality-delete entries reduced to one row per
-        pk by the (op_ts, seq) version order; tombstones retained
-        (callers filter). Builds the plan without running a Spark job.
+        pk by the (op_ts, seq) version order. Builds the plan without
+        running a Spark job.
 
         Plan (the shape Iceberg v2 readers use for equality deletes,
-        applied to MOR deltas too): the CHANGE side — delta rows and
-        delete entries, whose row counts the manifest records — folds to
-        one winner per pk (keep_last's narrow aggregate + broadcast
-        semi-join); the winners apply to the base as broadcast joins, so
-        the wide base payload stays MAP-ONLY. A base row is dropped iff
-        its pk's change winner has version >= the row's; a change winner
-        survives iff no base row is strictly newer. Ties go to the
-        change side, exactly as in a keep-last fold over base ⊕ changes
-        (the base holds at most one row per pk — the COW invariant).
+        applied to MOR deltas too): every CHANGE row — delta rows and
+        delete entries, whose row counts the manifest records — is
+        broadcast UNFOLDED as a narrow (pk, version) frame, and the base
+        keeps a row iff no change row of its pk has a version >= the
+        row's (a condition-carrying broadcast LEFT ANTI join). That is
+        exact without folding the change side first: the winner's
+        version is >= the base row's iff some change row's is. Ties go
+        to the change side, exactly as in a keep-last fold over base ⊕
+        changes (the base holds at most one row per pk — the COW
+        invariant). The wide base payload stays MAP-ONLY and the plan
+        has no aggregate on the base side.
+
+        The change-side winners (one per pk) come from ``keep_last``'s
+        narrow aggregate + broadcast semi-join, bounded by the recorded
+        row counts so it stays lazy; a winner survives iff no base row
+        of its pk is strictly newer. Those "newer" pks come from the
+        same broadcast — base (pk, version) ANTI JOIN on c >= b, then
+        SEMI JOIN on c < b — so all three joins share one build through
+        exchange reuse. The winner fold stays ``keep_last`` because its
+        map-side partial aggregate is linear in the change rows; a self
+        anti-join over the change rows ("no newer change row of the same
+        pk") compares every version of a key with every other —
+        quadratic in per-key multiplicity, which one hot key with tens
+        of thousands of versions in the deltas turns into seconds.
+
+        ``tombstones=False`` returns live rows only (``read()`` passes
+        it). With no delta outstanding for the probed buckets — an
+        equality-delete table's steady state — every change row is a
+        delete entry, none can survive a live read, and the plan is the
+        base anti-join alone: one broadcast plus the caller's action.
+        With deltas, tombstone winners are dropped before the "newer"
+        anti-join (a tombstone still shadows older rows inside the
+        fold and in the base anti-join).
+
         Above ``_DELETE_BROADCAST_CAP`` change rows, or when a file has
-        no recorded row count (older manifests), it falls back to that
-        single-shuffle fold over base ⊕ changes.
+        no recorded row count (older manifests), it falls back to one
+        single-shuffle keep-last fold over base ⊕ changes.
 
         ``part_bounds`` (directory pruning on derived partitions) prunes
-        the base side of the winner plan: entries only remove base rows
-        and a surviving winner is checked against the UNPRUNED base, so
-        no stale in-range version can shadow an out-of-range winner. The
-        fold ignores it (a key's winner may sit outside the pruned range
-        while a stale version sits inside it); the caller's residual
-        filter keeps either plan correct.
+        the base side of the anti-join plan: entries only remove base
+        rows and a surviving winner is checked against the UNPRUNED
+        base, so no stale in-range version can shadow an out-of-range
+        winner. The fold ignores it (a key's winner may sit outside the
+        pruned range while a stale version sits inside it); the caller's
+        residual filter keeps either plan correct.
+
+        ``pk_eq`` ({pk column: value(s)}) restricts the change side to
+        those keys. Sound only when the caller filters its output by the
+        same predicate (``scan`` does): a key's resolved row depends on
+        that key's rows alone. Spark infers the restriction for the base
+        anti-join's broadcast from the caller's filter but not for the
+        fold (its row tag blocks pushdown) nor the "newer" joins; stating
+        it here keeps all three joins on one broadcast build and folds
+        only the probed keys.
 
         ``with_delete_files=False`` folds base ⊕ deltas only, leaving
         the delete files AUTHORITATIVE on top (partial compaction uses
         it: the rewritten buckets stay shadowed by the untouched delete
         files at read time, instead of duplicating entries into rows)."""
-        parts = self._delta_parts(buckets)
-        if with_delete_files:
-            parts += self._delete_file_parts(buckets)
+        live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+
+        def out(df: DataFrame) -> DataFrame:
+            return df if tombstones else df.filter(live)
+
+        deltas = self._delta_parts(buckets)
+        parts = deltas + (self._delete_file_parts(buckets)
+                          if with_delete_files else [])
         if not parts:
             # every delta and delete file skipped for the probed buckets
             # — the base is authoritative and directory pruning is sound
-            return self._read_base(buckets, part_bounds)
+            return out(self._read_base(buckets, part_bounds))
         pk, order = self.pk, (VTS_COL, VSEQ_COL)
         # by-name unions fill a delete entry's missing payload with NULL
         changes = parts[0][0]
         for p, _ in parts[1:]:
             changes = changes.unionByName(p, allowMissingColumns=True)
+        if pk_eq:
+            changes = changes.filter(self._eq_filter(pk_eq))
         counts = [n for _, n in parts]
         n_rows = None if None in counts else sum(counts)
         base = self._read_base(buckets)
         if n_rows is None or n_rows > self._DELETE_BROADCAST_CAP:
-            return keep_last(
+            return out(keep_last(
                 base.unionByName(changes, allowMissingColumns=True),
                 pk=pk, order=order,
-            )
-        # one winner per pk among the change rows; n_rows bounds the
-        # winner count, so the fold stays lazy (no checkpoint, no count)
-        cw = keep_last(changes, pk=pk, order=order,
-                       broadcast_winner_rows=self._DELETE_BROADCAST_CAP,
-                       max_rows=n_rows)
-        # ONE broadcast frame for both base-side joins (exchange reuse)
-        cw_ver = F.broadcast(cw.select(
-            *pk,
+            ))
+        # ONE broadcast of every change row's narrow version for all
+        # three base-side joins (exchange reuse); n_rows bounds its size
+        cpk = [f"_c_pk{i}" for i in range(len(pk))]
+        bc = F.broadcast(changes.select(
+            *[F.col(c).alias(a) for c, a in zip(pk, cpk)],
             F.col(VTS_COL).alias("_c_vts"),
             F.col(VSEQ_COL).alias("_c_vseq"),
-            F.lit(True).alias("_c_hit"),
         ))
+        same_pk = functools.reduce(
+            lambda a, b: a & b,
+            [F.col(c) == F.col(a) for c, a in zip(pk, cpk)],
+        )
         change_ver = F.struct(F.col("_c_vts"), F.col("_c_vseq"))
         base_ver = F.struct(F.col(VTS_COL), F.col(VSEQ_COL))
-        kept = (
-            (base if part_bounds is None
-             else self._read_base(buckets, part_bounds))
-            .join(cw_ver, on=pk, how="left")
-            .filter(~(F.col("_c_hit").isNotNull() & (change_ver >= base_ver)))
-            .drop("_c_vts", "_c_vseq", "_c_hit")
-        )
-        # pks whose base row is strictly newer than the change winner:
+        shadowed = same_pk & (change_ver >= base_ver)
+        kept = out(
+            base if part_bounds is None
+            else self._read_base(buckets, part_bounds)
+        ).join(bc, shadowed, "left_anti")
+        if not deltas and not tombstones:
+            return kept
+        # one winner per pk among the change rows; n_rows bounds the
+        # winner count, so the fold stays lazy (no checkpoint, no count)
+        cw = out(keep_last(changes, pk=pk, order=order,
+                           broadcast_winner_rows=self._DELETE_BROADCAST_CAP,
+                           max_rows=n_rows))
+        # pks whose base row is strictly newer than every change row:
         # the base side streams a COLUMN-PRUNED (pk, version) scan
-        # against the broadcast winners, so the build side is the small
-        # change side at any base size
+        # against the broadcast, so the build side is the small change
+        # side at any base size
         newer = (
             base.select(*pk, VTS_COL, VSEQ_COL)
-            .join(cw_ver, on=pk, how="inner")
-            .filter(base_ver > change_ver)
+            .join(bc, shadowed, "left_anti")
+            .join(bc, same_pk & (change_ver < base_ver), "left_semi")
             .select(*pk)
         )
         surv = cw.join(F.broadcast(newer), on=pk, how="left_anti")
@@ -1014,12 +1062,12 @@ class LakeTable:
         buckets: list[int] | None = None,
         with_internal: bool = False,
         _part_bounds: dict | None = None,
+        _pk_eq: dict | None = None,
     ) -> DataFrame:
         """Current logical state: version-resolved, tombstones dropped,
         bucket-pruned when requested."""
-        out = self._resolve(buckets, _part_bounds).filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        )
+        out = self._resolve(buckets, _part_bounds, tombstones=False,
+                            pk_eq=_pk_eq)
         if with_internal:
             return out
         return out.drop(*_HIDDEN, _BUCKET_COL)
@@ -1060,6 +1108,16 @@ class LakeTable:
     @staticmethod
     def _as_list(v) -> list:
         return list(v) if isinstance(v, (list, tuple, set)) else [v]
+
+    @classmethod
+    def _eq_filter(cls, eq: dict) -> Column:
+        """AND of ``col == value`` / ``col IN (values)`` over ``eq``."""
+        preds = []
+        for c, v in eq.items():
+            vs = cls._as_list(v)
+            preds.append(F.col(c).isin(vs) if len(vs) > 1
+                         else (F.col(c) == vs[0]))
+        return functools.reduce(lambda a, b: a & b, preds)
 
     def _prune_buckets(
         self, eq: dict | None = None, between: dict | None = None
@@ -1255,12 +1313,11 @@ class LakeTable:
         resulting [lo, hi] becomes a PartitionFilter on ``_p_<name>``."""
         out = self.read(buckets=self._prune_buckets(eq, between),
                         with_internal=with_internal,
-                        _part_bounds=self._partition_bounds(eq, between))
-        for c, v in (eq or {}).items():
-            vs = self._as_list(v)
-            out = out.filter(
-                F.col(c).isin(vs) if len(vs) > 1 else (F.col(c) == vs[0])
-            )
+                        _part_bounds=self._partition_bounds(eq, between),
+                        _pk_eq={c: v for c, v in (eq or {}).items()
+                                if c in self.pk})
+        if eq:
+            out = out.filter(self._eq_filter(eq))
         for c, (lo, hi) in (between or {}).items():
             out = out.filter(F.col(c).between(lo, hi))
         return out
@@ -2979,14 +3036,3 @@ class LakeTable:
             except FileNotFoundError:
                 continue  # concurrent publish/abandon won the race
         return {"expired": expired}
-
-    # ------------------------------------------------------------ introspection
-    def lineage_df(self) -> DataFrame:
-        rows = [
-            (bid, json.dumps(v.get("offsets", {})), json.dumps(v.get("metrics", {})), float(v.get("ts", 0.0)))
-            for bid, v in self.manifest["lineage"].items()
-        ]
-        return self.spark.createDataFrame(
-            rows, "batch_id string, offsets string, metrics string, committed_at double"
-        )
-

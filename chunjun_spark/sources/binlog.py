@@ -231,16 +231,6 @@ def write_binlog_files(
         _MTIME_FLOOR = base + max(len(parts) - 1, 0)
 
 
-def decode_snowflake(df: DataFrame, col: str = "snowflake_ts") -> DataFrame:
-    """Decode a Snowflake id into (event epoch-millis, low sequence bits).
-
-    Reference: docs/realTime/reader/binlogreader.md:200-208 (ts >> 22).
-    """
-    return df.withColumn("sf_epoch_ms", F.shiftright(F.col(col), 22)).withColumn(
-        "sf_seq", F.col(col).bitwiseAND(F.lit((1 << 22) - 1))
-    )
-
-
 DATA_OPS = ("INSERT", "UPDATE", "DELETE")
 
 

@@ -310,18 +310,18 @@ def test_streaming_replay_into_equality_delete_table(spark, tmp_path):
     assert eq.delete_files  # the churny stream produced delete entries
 
 
-def _plan_jobs(spark, build):
-    """(frame, Spark jobs launched while ``build()`` planned it)."""
+def _jobs(spark, fn):
+    """(``fn()``, Spark jobs launched while it ran)."""
     import uuid
 
     sc = spark.sparkContext
-    gid = f"plan-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(gid, "read planning")
+    gid = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "job count")
     try:
-        df = build()
+        out = fn()
     finally:
         sc.setJobGroup(None, None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(gid))
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 def _churn(spark, t, mor: bool):
@@ -362,7 +362,7 @@ def test_read_planning_launches_no_spark_job(spark, tmp_path, mode):
                   lambda: t.scan(eq={"k": [0, 4]}),
                   lambda: t.scan(eq={"grp": "b"}),
                   lambda: t.read()):
-        df, jobs = _plan_jobs(spark, build)
+        df, jobs = _jobs(spark, build)
         assert jobs == 0
         df.collect()  # and the plan runs
     live = {r["k"]: r for r in t.read().collect()}
@@ -390,7 +390,7 @@ def test_change_winner_plan_matches_fold_at_cap_boundary(
         return sorted(map(tuple, t.point_lookup(0, 1, 3, 30).collect()))
 
     def planning_jobs():
-        return _plan_jobs(spark, t._resolve)[1]
+        return _jobs(spark, t._resolve)[1]
 
     monkeypatch.setattr(LakeTable, "_DELETE_BROADCAST_CAP", n)
     at_cap = (resolved(), looked_up())
@@ -405,6 +405,67 @@ def test_change_winner_plan_matches_fold_at_cap_boundary(
     assert planning_jobs() > 0
     assert at_cap == above == unrecorded
     assert at_cap[0] and at_cap[1]
+
+
+@pytest.mark.parametrize("mode,bound", [("eqdel", 2), ("mor", 5)])
+def test_read_execution_job_count(spark, tmp_path, mode, bound):
+    """Executing a read runs a pinned number of Spark jobs. On a
+    deltas-free equality-delete table the delete entries apply as ONE
+    broadcast anti-join: the broadcast build plus the caller's action.
+    With MOR deltas outstanding the change-winner fold adds its narrow
+    aggregate shuffle and winner broadcast."""
+    t = LakeTable.create(spark, str(tmp_path / mode), SCHEMA, pk=["k"],
+                         n_buckets=4, equality_deletes=(mode == "eqdel"))
+    t = _churn(spark, t, mor=(mode == "mor"))
+    assert bool(t.manifest["deltas"]) == (mode == "mor")
+    for build in (lambda: t.point_lookup(1, 3), lambda: t.read()):
+        df = build()
+        _, jobs = _jobs(spark, df.collect)
+        assert jobs <= bound, f"{mode}: {jobs} jobs > {bound}"
+
+
+def test_hot_key_delta_matches_fold(spark, tmp_path, monkeypatch):
+    """One delta holding thousands of versions of ONE key, next to a
+    delete file: the broadcast anti-join plan resolves the same state as
+    the keep-last fold over base ⊕ changes. The change-side winners stay
+    a keep_last fold (map-side partial aggregate, linear in the change
+    rows) because a self anti-join over the change rows would compare
+    every version of a key with every other — quadratic in the hot
+    key's multiplicity."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, pk=["k"],
+                         n_buckets=4, equality_deletes=True)
+    t.merge(_mk(spark, [(k, "a", float(k), "UPSERT", k)
+                        for k in range(20)]), batch_id="b1",
+            assume_unique_keys=True)
+    t.refresh().merge(_mk(spark, [(k, None, None, "DELETE", 100 + k)
+                                  for k in (2, 5, 7, 11)]),
+                      batch_id="b2", assume_unique_keys=True)
+    hot = spark.range(6_000).select(
+        F.lit(7).cast("long").alias("k"),
+        F.concat(F.lit("h"), F.col("id").cast("string")).alias("grp"),
+        F.col("id").cast("double").alias("v"),
+        F.when(F.col("id") % 3 == 0, F.lit("DELETE"))
+        .otherwise(F.lit("UPSERT")).alias(OP_COL),
+        (F.col("id") + 1_000).alias(VSEQ_COL),
+    ).withColumn(VTS_COL, F.lit("1970-01-01").cast("timestamp"))
+    t.refresh().append_delta(hot.unionByName(
+        _mk(spark, [(3, "d", 3.0, "UPSERT", 1), (4, "d", 4.0, "UPSERT", 9_000)])
+    ), batch_id="b3")
+    t = t.refresh()
+    assert t.delete_files and t.manifest["deltas"][0]["n"] >= 5_000
+
+    def state():
+        return (sorted(map(tuple, t.read().collect())),
+                sorted(map(tuple, t._resolve().collect())))
+
+    plan = state()
+    monkeypatch.setattr(LakeTable, "_DELETE_BROADCAST_CAP", 0)
+    assert state() == plan
+    live = {r[0]: r for r in plan[0]}
+    # the hot key's newest version (id 5999, an UPSERT) wins; the stale
+    # re-delivery of key 3 stays shadowed by its base row
+    assert live[7] == (7, "h5999", 5999.0) and live[3] == (3, "a", 3.0)
+    assert live[4] == (4, "d", 4.0) and 2 not in live and 5 not in live
 
 
 def test_unmappable_pk_in_delete_file_raises(spark, tmp_path):
@@ -476,17 +537,17 @@ def test_literal_evaluation_launches_no_spark_job(spark, tmp_path):
         pk=["k"], n_buckets=16,
         partition_exprs=[("day", "date_trunc('day', ts)", "ts")])
     keys = ["a", "b", "zz"]
-    buckets, jobs = _plan_jobs(spark, lambda: t._buckets_for_key_values(keys))
+    buckets, jobs = _jobs(spark, lambda: t._buckets_for_key_values(keys))
     assert jobs == 0
     want = {r[0] for r in spark.createDataFrame([(k,) for k in keys], "k string")
             .select(F.pmod(F.xxhash64("k"), F.lit(16)).cast("int")).collect()}
     assert set(buckets) == want
-    bounds, jobs = _plan_jobs(spark, lambda: t._partition_bounds(
+    bounds, jobs = _jobs(spark, lambda: t._partition_bounds(
         None, {"ts": ("2024-01-05 10:00:00", "2024-01-07 23:00:00")}))
     assert jobs == 0
     assert [str(v) for v in bounds["_p_day"]] == [
         "2024-01-05 00:00:00", "2024-01-07 00:00:00"]
-    (by_value, lanes), jobs = _plan_jobs(spark, lambda: bloom._value_lane_pairs(
+    (by_value, lanes), jobs = _jobs(spark, lambda: bloom._value_lane_pairs(
         spark, T.StringType(), keys, 1 << 20, 5))
     assert jobs == 0
     assert len(by_value) == 3 and all(len(p) == 5 for p in by_value.values())

@@ -971,20 +971,24 @@ def main() -> int:
         "equality_delete_anti_join_resolve",
         eqr,
         {
+            "deltas-free live read (delete entries only)":
+                not eqt.manifest["deltas"] and bool(eqt.delete_files),
+            # the live read is the base ANTI JOIN the unfolded entries:
+            # one broadcast build, the base payload map-only
+            "exactly one BroadcastExchange":
+                len(re.findall(r"\(\d+\) BroadcastExchange", p)) == 1,
+            "no shuffle Exchange":
+                len(re.findall(r"\(\d+\) Exchange", p)) == 0,
+            "no aggregate (entries never fold on a live read)":
+                "HashAggregate" not in p and "SortAggregate" not in p,
             "delete entries applied via broadcast join (no SortMergeJoin)":
                 "BroadcastHashJoin" in p and "SortMergeJoin" not in p,
             "still broadcast-only with autoBroadcastJoinThreshold=-1 "
-            "(explicit small-side builds, incl. the survivor join)":
+            "(explicit small-side build)":
                 "BroadcastHashJoin" in p_no_auto
                 and "SortMergeJoin" not in p_no_auto,
             "no keep-last window over the payload":
                 "Window" not in p,
-            # the surviving-entry side pays the plan's only exchanges:
-            # the narrow entry fold + broadcast builds — never a
-            # payload-wide shuffle (payload column stays out of every
-            # Exchange's input by construction; count bounded)
-            "exchange count bounded (narrow sides only)":
-                len(re.findall(r"\(\d+\) Exchange", p)) <= 4,
         },
         out,
     )
@@ -1024,6 +1028,24 @@ def main() -> int:
     mort = mort.refresh()
     morr = mort.read()
     p = formatted(morr)
+    # the broadcast of every change row's (pk, version) feeds the base
+    # anti-join and both "newer base" joins: ONE build, the others use
+    # ReusedExchange (static planning shows the reuse rule's result;
+    # adaptive execution reuses the same way through its stage cache)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        p_static = formatted(mort.read())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    version_builds = [
+        i for i, inp in re.findall(
+            r"\((\d+)\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]",
+            p_static)
+        if "_c_vts" in inp
+    ]
+    reuses = re.findall(
+        r"\(\d+\) ReusedExchange \[Reuses operator id: (\d+)\]", p_static)
     ex_inputs = re.findall(
         r"\(\d+\) (?:Broadcast)?Exchange\nInput \[\d+\]: \[([^\]]*)\]", p
     )
@@ -1041,6 +1063,10 @@ def main() -> int:
             "change winners applied via broadcast joins, no window":
                 "BroadcastHashJoin" in p and "SortMergeJoin" not in p
                 and "Window" not in p,
+            "change-version broadcast built once, reused by the other "
+            "joins (ReusedExchange)":
+                len(version_builds) == 1
+                and reuses.count(version_builds[0]) >= 1,
         },
         out,
     )
