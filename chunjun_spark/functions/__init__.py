@@ -3,8 +3,8 @@
 These are the large-scale data-curation operators a 100 TB ingest needs on
 top of the CDC core: text statistics and language heuristics (text.py),
 document deduplication — exact, Jaccard, MinHash+LSH, SimHash
-(dedup_docs.py), approximate nearest-neighbour search over embedding
-columns (ann.py), and multimodal binary-column plumbing (multimodal.py).
+(dedup_docs.py), and approximate nearest-neighbour search over embedding
+columns (ann.py).
 
 All hot-path math is native Spark SQL expressions (JVM, whole-stage
 codegen); Python appears only as Arrow-batched pandas UDFs where Spark has

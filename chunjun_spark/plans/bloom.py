@@ -180,9 +180,10 @@ def refresh_index(
 ) -> None:
     """Recompute bloom rows for the buckets this commit rewrote and
     carry the previous index forward for untouched buckets; records the
-    result in ``new_manifest['bloom_index']``. Called from the three
-    base-rewrite sites (COW merge, full compact, partial compact) after
-    the data write, before the manifest commit — a crash in between
+    result in ``new_manifest['bloom_index']``. Called from the lake
+    snapshot producer's one base rewrite (``LakeTable._rewrite_base``,
+    which COW merge, full and partial compact share) after the data
+    write, before the manifest commit — a crash in between
     leaves an unreferenced index dir for vacuum, never a bad snapshot.
 
     Coverage bookkeeping: ``buckets`` lists the bucket ids whose base

@@ -77,6 +77,14 @@ _HIDDEN_TYPES = [(VTS_COL, "timestamp"), (VSEQ_COL, "bigint"),
                  (DELETED_COL, "boolean")]
 
 
+def _is_tombstone() -> Column:
+    """True on a tombstone row. A NULL ``_deleted`` means live, in every
+    reader and writer alike — the equality-delete split relies on it,
+    so a change row whose ``_op`` is NULL is an upsert in both table
+    modes."""
+    return F.coalesce(F.col(DELETED_COL), F.lit(False))
+
+
 def follow_changes(
     spark: SparkSession,
     root: str,
@@ -416,7 +424,7 @@ class LakeTable:
             "parent": None,
         }
         t = cls(spark, root, manifest)
-        t._write_manifest(manifest, expected_parent=None)
+        t._commit(manifest)
         return t
 
     @classmethod
@@ -437,7 +445,7 @@ class LakeTable:
         Every commit keeps its manifest (``_manifests/v{N}.json``), so any
         historical snapshot remains readable until garbage-collected —
         the Iceberg snapshot-id read analog. Writes against a historical
-        snapshot are rejected by the optimistic ``_write_manifest`` check.
+        snapshot are rejected by the commit's optimistic CAS.
         """
         if sum(x is not None for x in (version, tag, as_of)) > 1:
             raise ValueError("pass at most one of version, tag, as_of")
@@ -545,36 +553,6 @@ class LakeTable:
     def cluster_cols(self) -> list[str]:
         return self.manifest.get("cluster_cols", [])
 
-    def _clustered(self, df: DataFrame, manifest: dict | None = None) -> DataFrame:
-        """Apply the table's sort order inside each bucket task before a
-        partitioned write; no-op without cluster_cols. Must follow the
-        repartition-by-bucket (sortWithinPartitions sorts the TASK's
-        rows, and a bucket is exactly one task there).
-
-        ``cluster_kind='zorder'``: sort by the interleaved-bit Morton
-        key over cluster_cols instead of lexicographically — every
-        parquet row group then has a narrow min/max range on ALL the
-        cluster columns at once, so ordinary pushed filters skip row
-        groups for predicates on any of them (plans/zorder.py). Bounds
-        come from the manifest (harvested at compact time); layout is
-        advisory, so stale bounds only cost skipping efficiency.
-
-        ``manifest``: the in-flight next manifest when the caller is
-        changing the cluster spec in the same commit (compact)."""
-        m = manifest if manifest is not None else self.manifest
-        ccols = m.get("cluster_cols", [])
-        if not ccols:
-            return df
-        if m.get("cluster_kind") == "zorder" and m.get("zorder_bounds"):
-            from chunjun_spark.plans.zorder import zorder_key
-
-            return df.sortWithinPartitions(
-                _BUCKET_COL, zorder_key(m["zorder_bounds"])
-            )
-        return df.sortWithinPartitions(
-            _BUCKET_COL, *[F.col(c) for c in ccols]
-        )
-
     # ------------------------------------------------------------- read
     @property
     def bucket_cols(self) -> list[str]:
@@ -599,10 +577,6 @@ class LakeTable:
         """Hidden partition specs ({name, expr[, source]}); see create()."""
         return self.manifest.get("partition_exprs", [])
 
-    def _part_col_names(self, manifest: dict | None = None) -> list[str]:
-        m = manifest if manifest is not None else self.manifest
-        return [f"_p_{p['name']}" for p in m.get("partition_exprs", [])]
-
     def _partition_ref_cols(self) -> set[str]:
         """Schema columns a partition spec references (source plus any
         identifier in the expr text that matches a column name) —
@@ -616,41 +590,41 @@ class LakeTable:
                 refs.add(p["source"])
         return refs & set(self.schema.names())
 
-    def _with_partition_cols(
-        self, df: DataFrame, manifest: dict | None = None
-    ) -> DataFrame:
-        m = manifest if manifest is not None else self.manifest
-        for p in m.get("partition_exprs", []):
-            df = df.withColumn(f"_p_{p['name']}", F.expr(p["expr"]))
-        return df
+    def _write_base_files(self, df: DataFrame, out_dir: str, m: dict) -> None:
+        """The one base-file writer, laid out as the in-flight manifest
+        ``m`` says (a compaction may change the spec in the same commit):
+        repartitioned-by-bucket input → sort inside each bucket task →
+        dynamic-partition parquet write. The sort must follow the
+        repartition (sortWithinPartitions sorts the TASK's rows, and a
+        bucket is exactly one task there).
 
-    def _write_base_files(self, df: DataFrame, out_dir: str,
-                          manifest: dict | None = None) -> None:
-        """The one base-file writer: repartitioned-by-bucket input →
-        cluster sort → dynamic-partition parquet write. With partition
-        specs, derived ``_p_*`` columns are computed from the final row
-        values and appended to the directory layout
-        (``_bucket=b/_p_day=.../part-*``); rows are additionally sorted
-        by the partition columns inside each bucket task so the dynamic
-        writer streams one open file at a time instead of multiplexing
-        |partitions| writers (the same measured 5× cliff the
-        bucket-repartition already avoids)."""
-        pcols = self._part_col_names(manifest)
-        if not pcols:
-            out = self._clustered(df, manifest=manifest)
+        - ``cluster_cols`` sort rows lexicographically; with
+          ``cluster_kind='zorder'`` by the interleaved-bit Morton key over
+          them instead, so every parquet row group has a narrow min/max
+          range on ALL the cluster columns at once and pushed filters on
+          any of them skip row groups (plans/zorder.py). Bounds come from
+          the manifest (harvested at compact time); layout is advisory,
+          so stale bounds only cost skipping efficiency.
+        - Partition specs add derived ``_p_*`` columns, computed from
+          the final row values, to the directory layout
+          (``_bucket=b/_p_day=.../part-*``); rows are sorted by them
+          first so the dynamic writer streams one open file at a time
+          instead of multiplexing |partitions| writers (the same
+          measured 5× cliff the bucket-repartition avoids)."""
+        specs = m.get("partition_exprs", [])
+        pcols = [f"_p_{p['name']}" for p in specs]
+        ccols = m.get("cluster_cols", [])
+        if m.get("cluster_kind") == "zorder" and m.get("zorder_bounds"):
+            from chunjun_spark.plans.zorder import zorder_key
+
+            sort_keys = [zorder_key(m["zorder_bounds"])]
         else:
-            m = manifest if manifest is not None else self.manifest
-            ccols = m.get("cluster_cols", [])
-            if m.get("cluster_kind") == "zorder" and m.get("zorder_bounds"):
-                from chunjun_spark.plans.zorder import zorder_key
-
-                sort_keys = [zorder_key(m["zorder_bounds"])]
-            else:
-                sort_keys = [F.col(c) for c in ccols]
-            out = self._with_partition_cols(df, manifest).sortWithinPartitions(
-                _BUCKET_COL, *pcols, *sort_keys
-            )
-        out.write.mode("overwrite").partitionBy(_BUCKET_COL, *pcols).parquet(
+            sort_keys = [F.col(c) for c in ccols]
+        for p in specs:
+            df = df.withColumn(f"_p_{p['name']}", F.expr(p["expr"]))
+        if pcols or ccols:
+            df = df.sortWithinPartitions(_BUCKET_COL, *pcols, *sort_keys)
+        df.write.mode("overwrite").partitionBy(_BUCKET_COL, *pcols).parquet(
             out_dir
         )
 
@@ -791,8 +765,8 @@ class LakeTable:
 
     def _write_delete_file(self, dels: DataFrame, m: dict) -> dict | None:
         """Write one narrow (pk, version, bucket) equality-delete file
-        for manifest ``m``'s version — the single writer all three
-        producers (merge, full compact, partial compact) share. Row
+        for manifest ``m``'s version — the writer behind the snapshot
+        producer's equality-delete split (``_split_tombstones``). Row
         count + touched-bucket set ride the write action (Observation)
         and land in the entry (``n`` bounds the resolve's broadcast
         side without a count job); an empty frame leaves NO dir behind
@@ -991,10 +965,8 @@ class LakeTable:
         the delete files AUTHORITATIVE on top (partial compaction uses
         it: the rewritten buckets stay shadowed by the untouched delete
         files at read time, instead of duplicating entries into rows)."""
-        live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-
         def out(df: DataFrame) -> DataFrame:
-            return df if tombstones else df.filter(live)
+            return df if tombstones else df.filter(~_is_tombstone())
 
         deltas = self._delta_parts(buckets)
         parts = deltas + (self._delete_file_parts(buckets)
@@ -1439,8 +1411,7 @@ class LakeTable:
         m["bloom_cols"] = list(cols)
         m["bloom_bits"] = int(n_bits)
         m["bloom_k"] = int(k)
-        self._write_manifest(m, expected_parent=m["parent"])
-        return {"version": m["version"], "bloom_cols": list(cols)}
+        return {**self._commit(m), "bloom_cols": list(cols)}
 
     # --------------------------------------------------- change-data-feed
     @staticmethod
@@ -1478,10 +1449,11 @@ class LakeTable:
 
         Plan shape: when every commit in the window only APPENDED delta
         files (MOR ingest — base buckets untouched), the touched buckets
-        come from a column-pruned scan of just those delta files and the
-        snapshot diff runs on those buckets only: O(changes +
+        come from the delta entries' recorded bucket sets (no Spark job)
+        and the snapshot diff runs on those buckets only: O(changes +
         touched-bucket scan), never O(table). With a COW merge or
-        compaction in the window it falls back to a full keyed diff.
+        compaction in the window, or a delta entry that recorded no
+        bucket set, it falls back to a full keyed diff.
         Either way the OLD side contributes only a narrow (pk, version,
         deleted) projection; the new-side payload crosses the network
         once, for the full-outer join on pk (reference analog: ChunJun's
@@ -1516,16 +1488,11 @@ class LakeTable:
             if not new_deltas:
                 # nothing committed in the window
                 return self._empty_changes(new, with_internal)
-            touched = set()
-            for d in new_deltas:
-                rows = (
-                    self.spark.read.parquet(os.path.join(self.root, d["path"]))
-                    .select(_BUCKET_COL)
-                    .distinct()
-                    .collect()
-                )
-                touched.update(int(r[0]) for r in rows)
-            buckets = sorted(touched)
+            # append_delta records each entry's touched buckets; an
+            # entry without them (older manifest) takes the full diff
+            if all(d.get("buckets") is not None for d in new_deltas):
+                buckets = sorted({int(b) for d in new_deltas
+                                  for b in d["buckets"]})
 
         pk = new.pk
         new_res = new._resolve(buckets)
@@ -1533,11 +1500,11 @@ class LakeTable:
             *pk,
             F.col(VTS_COL).alias("_o_vts"),
             F.col(VSEQ_COL).alias("_o_vseq"),
-            F.coalesce(F.col(DELETED_COL), F.lit(False)).alias("_o_del"),
+            _is_tombstone().alias("_o_del"),
         )
         j = new_res.join(old_narrow, on=pk, how="full_outer")
         n_present = F.col(VTS_COL).isNotNull()
-        n_del = F.coalesce(F.col(DELETED_COL), F.lit(False))
+        n_del = _is_tombstone()
         o_present = F.col("_o_vts").isNotNull()
         o_live = o_present & ~F.col("_o_del")
         same_ver = (
@@ -1592,9 +1559,7 @@ class LakeTable:
                     *cols,
                     F.col(VTS_COL),
                     F.col(VSEQ_COL),
-                    F.coalesce(F.col(DELETED_COL), F.lit(False)).alias(
-                        DELETED_COL
-                    ),
+                    _is_tombstone().alias(DELETED_COL),
                     F.col(_BUCKET_COL),
                     F.when(
                         F.col("_post_type") == "delete",
@@ -1618,12 +1583,13 @@ class LakeTable:
         return empty.drop(*_HIDDEN, _BUCKET_COL)
 
     # ------------------------------------------------------------ write
-    def _write_manifest(self, manifest: dict, expected_parent: int | None) -> None:
+    def _write_manifest(self, manifest: dict) -> None:
+        """Publish ``manifest``: optimistic CAS against its ``parent``."""
         mdir = os.path.join(self.root, "_manifests")
         cur = self._current_version(self.root)
-        if cur != expected_parent:
+        if cur != manifest["parent"]:
             raise ConcurrentCommitError(
-                f"manifest moved: expected v{expected_parent}, found v{cur}"
+                f"manifest moved: expected v{manifest['parent']}, found v{cur}"
             )
         v = manifest["version"]
         # wall-clock commit stamp: the AS-OF timestamp read resolves
@@ -1645,6 +1611,73 @@ class LakeTable:
         m["version"] += 1
         return m
 
+    # The snapshot producer (Iceberg SnapshotProducer analog): every lake
+    # write path builds the in-flight manifest ``m`` and turns written
+    # files into a visible snapshot through these three steps only.
+    def _rewrite_base(self, m: dict, frame: DataFrame, replaced: set[int],
+                      n_tasks: int, tag: str = "", full: bool = False) -> set[int]:
+        """Producer step (a), the one base rewrite: write the bucketed
+        ``frame`` into a fresh data dir of ``m``, register every bucket
+        written, drop the ``replaced`` buckets that came out empty,
+        harvest footer stats and refresh the bloom index (``full``
+        rebuilds it instead of carrying untouched buckets). Returns the
+        buckets written.
+
+        The frame is repartitioned into ``n_tasks`` tasks by bucket first:
+        otherwise every task multiplexes up to n_buckets open writers
+        (measured 5× slower) and emits tasks×buckets tiny files. The uuid
+        dir suffix (after ``tag``, e.g. ``pc-``) lets two optimistic
+        writers race on one version: the loser's files become
+        unreferenced garbage instead of clobbering the winner's."""
+        rel = os.path.join("data", f"v{m['version']}-{tag}{uuid.uuid4().hex[:8]}")
+        out_dir = os.path.join(self.root, rel)
+        self._write_base_files(
+            frame.repartition(n_tasks, F.col(_BUCKET_COL)), out_dir, m
+        )
+        written = {int(n.split("=", 1)[1]) for n in os.listdir(out_dir)
+                   if n.startswith(f"{_BUCKET_COL}=")}
+        stats = self._harvest_stats(out_dir, written)
+        for b in replaced - written:
+            m["buckets"].pop(str(b), None)
+        for b in written:
+            m["buckets"][str(b)] = {
+                "path": os.path.join(rel, f"{_BUCKET_COL}={b}"),
+                "schema_version": m["schema_version"],
+                **({"stats": stats[b]} if stats.get(b) else {}),
+            }
+        self._refresh_bloom(m, out_dir, rewritten=written,
+                            removed=replaced - written, full=full)
+        return written
+
+    def _split_tombstones(self, m: dict, frame: DataFrame) -> DataFrame:
+        """Producer step (b), the one equality-delete split: write the
+        tombstone rows of the MATERIALIZED ``frame`` (both this write and
+        the base write consume it) as one delete-file entry of ``m`` and
+        return its live rows, so base files stay dead-row-free."""
+        entry = self._write_delete_file(frame.filter(_is_tombstone()), m)
+        if entry is not None:
+            m.setdefault("delete_files", []).append(entry)
+        return frame.filter(~_is_tombstone())
+
+    def _commit(
+        self,
+        m: dict,
+        batch_id: str | None = None,
+        offsets: dict | None = None,
+        n_changes: int = 0,
+        extra_metrics: dict | None = None,
+        wap_id: str | None = None,
+    ) -> dict:
+        """Producer step (c), the one commit point: record the batch's
+        lineage, then stage ``m`` under ``wap_id`` (write-audit-publish)
+        or publish it by CAS against ``m["parent"]``."""
+        self._record_lineage(m, batch_id, offsets, n_changes, extra_metrics)
+        if wap_id is not None:
+            self._write_staged(m, wap_id)
+            return {"version": m["version"], "staged": True, "wap_id": wap_id}
+        self._write_manifest(m)
+        return {"version": m["version"]}
+
     def _validate_changes_frame(self, changes: DataFrame) -> None:
         """Schema-shape validation BEFORE any idempotence short-circuit
         (CLAUDE.md rule, review r4): a malformed call arriving with an
@@ -1656,7 +1689,8 @@ class LakeTable:
             raise ValueError(f"changes missing pk columns {missing}")
 
     def _prep_changes(self, changes: DataFrame) -> DataFrame:
-        """Normalize a change DataFrame: ensure _op + version pair
+        """Normalize a change DataFrame (pk columns already checked by
+        ``_validate_changes_frame``): ensure _op + version pair
         (_vts, _vseq), align columns to current schema, add bucket."""
         if OP_COL not in changes.columns:
             changes = changes.withColumn(OP_COL, F.lit("UPSERT"))
@@ -1666,9 +1700,6 @@ class LakeTable:
             changes = changes.withColumn(
                 VTS_COL, F.lit("1970-01-01 00:00:00").cast("timestamp")
             )
-        missing = [c for c in self.pk if c not in changes.columns]
-        if missing:
-            raise ValueError(f"changes missing pk columns {missing}")
         cols = []
         for f in self.schema.fields:
             if f["name"] in changes.columns:
@@ -1757,7 +1788,7 @@ class LakeTable:
             # equality-delete mode) the per-bucket delete census
             stats = ch.groupBy(_BUCKET_COL).agg(
                 F.count(F.lit(1)).alias("count"),
-                F.count(F.when(F.col(DELETED_COL), 1)).alias("n_del"),
+                F.count(F.when(_is_tombstone(), 1)).alias("n_del"),
             ).collect()
             n_changes = sum(r["count"] for r in stats)
             small = n_changes < 1_000_000
@@ -1803,70 +1834,25 @@ class LakeTable:
             keys = eff.select(*self.pk)
             kept = base.join(F.broadcast(keys) if small else keys,
                              on=self.pk, how="left_anti")
-            data_cols = [*self.schema.names(), *_HIDDEN, _BUCKET_COL]
-            eff = patched
+            m = self._next_manifest()
             if eq_del:
                 # equality-delete mode: the rewritten base holds ONLY
-                # live rows; effective deletes go to a narrow
-                # (pk, version, bucket) delete file that the resolve
-                # unions into the keep-last fold — dead rows never
-                # occupy base files between compactions
-                new_data = kept.select(*data_cols).unionByName(
-                    eff.filter(~F.col(DELETED_COL)).select(*data_cols)
-                )
-            else:
-                new_data = kept.select(*data_cols).unionByName(
-                    eff.select(*data_cols)
-                )
-
-            m = self._next_manifest()
-            # uuid suffix: two optimistic writers may race on the same
-            # next version; unique dirs mean the LOSER's files become
-            # unreferenced garbage instead of clobbering the winner's
-            rel = os.path.join("data", f"v{m['version']}-{uuid.uuid4().hex[:8]}")
-            out_dir = os.path.join(self.root, rel)
-            # co-locate each bucket in one task before the dynamic-partition
-            # write: otherwise every task multiplexes up to n_buckets open
-            # writers (measured 5× slower) and emits tasks×buckets tiny files
-            self._write_base_files(
-                new_data.repartition(self.n_buckets, F.col(_BUCKET_COL)),
-                out_dir,
+                # live rows; effective deletes (stale ones were dropped by
+                # the version guard above) go to a narrow delete file
+                patched = self._split_tombstones(m, patched)
+            data_cols = [*self.schema.names(), *_HIDDEN, _BUCKET_COL]
+            self._rewrite_base(
+                m,
+                kept.select(*data_cols).unionByName(patched.select(*data_cols)),
+                set(touched), self.n_buckets,
             )
-
-            written = self._discover_bucket_dirs(out_dir)
-            stats = self._harvest_stats(out_dir, written & set(touched))
-            for b in touched:
-                key = str(b)
-                if b in written:
-                    m["buckets"][key] = {
-                        "path": os.path.join(rel, f"{_BUCKET_COL}={b}"),
-                        "schema_version": m["schema_version"],
-                        **({"stats": stats[b]} if stats.get(b) else {}),
-                    }
-                else:
-                    m["buckets"].pop(key, None)  # bucket emptied by deletes
-            if eq_del:
-                # effective deletes only (stale deletes were dropped by
-                # the version guard above)
-                entry = self._write_delete_file(
-                    eff.filter(F.col(DELETED_COL)), m
-                )
-                if entry is not None:
-                    m.setdefault("delete_files", []).append(entry)
-            self._refresh_bloom(m, out_dir, rewritten=written & set(touched),
-                                removed=set(touched) - written)
-            self._record_lineage(m, batch_id, offsets, n_changes, extra_metrics)
-            if wap_id is not None:
-                self._write_staged(m, wap_id)
-            else:
-                self._write_manifest(m, expected_parent=m["parent"])
             return {
                 "skipped": False,
                 "batch_id": batch_id,
                 "n_changes": n_changes,
                 "touched_buckets": sorted(touched),
-                "version": m["version"],
-                **({"staged": True, "wap_id": wap_id} if wap_id is not None else {}),
+                **self._commit(m, batch_id, offsets, n_changes, extra_metrics,
+                               wap_id),
             }
         finally:
             ch.unpersist()  # drops the checkpointed blocks
@@ -1972,14 +1958,8 @@ class LakeTable:
             if frag is not None:
                 entry["bloom"] = frag
         m["deltas"].append(entry)
-        self._record_lineage(m, batch_id, offsets, n, extra_metrics)
-        if wap_id is not None:
-            self._write_staged(m, wap_id)
-        else:
-            self._write_manifest(m, expected_parent=m["parent"])
         return {"skipped": False, "batch_id": batch_id, "n_changes": n,
-                "version": m["version"],
-                **({"staged": True, "wap_id": wap_id} if wap_id is not None else {})}
+                **self._commit(m, batch_id, offsets, n, extra_metrics, wap_id)}
 
     def compact(
         self,
@@ -2040,7 +2020,7 @@ class LakeTable:
                                          purge_tombstones)
         resolved = self._resolve()
         if purge_tombstones:
-            resolved = resolved.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+            resolved = resolved.filter(~_is_tombstone())
         m = self._next_manifest()
         if new_n_buckets is not None and new_n_buckets < 1:
             raise ValueError("new_n_buckets must be >= 1")
@@ -2070,74 +2050,43 @@ class LakeTable:
         ).cast("int")
         if zorder_cols is not None:
             # OPTIMIZE ZORDER BY analog: adopt (or re-spec) the z-order
-            # layout in this rewrite. Bounds are harvested here (one
-            # narrow agg over data being rewritten anyway) and stored so
-            # later COW merge rewrites re-apply the same layout.
-            from chunjun_spark.plans.zorder import harvest_bounds
-
-            live = resolved.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            )
+            # layout in this rewrite; later COW merge rewrites re-apply it
             m["cluster_cols"] = list(zorder_cols)
             m["cluster_kind"] = "zorder"
-            m["zorder_bounds"] = harvest_bounds(
-                live.select(*zorder_cols), list(zorder_cols)
-            )
-        elif m.get("cluster_kind") == "zorder":
-            # plain full compact of a z-ordered table: refresh the
-            # bounds — the rewrite pays the scan anyway, and fresher
-            # bounds keep row-group skipping sharp as the domain drifts
+        if m.get("cluster_kind") == "zorder":
+            # bounds are harvested by every full compact of a z-ordered
+            # table (one narrow agg over data being rewritten anyway):
+            # fresher bounds keep row-group skipping sharp as the domain
+            # drifts
             from chunjun_spark.plans.zorder import harvest_bounds
 
             zc = m["cluster_cols"]
-            live = resolved.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+            m["zorder_bounds"] = harvest_bounds(
+                resolved.filter(~_is_tombstone()).select(*zc), zc
             )
-            m["zorder_bounds"] = harvest_bounds(live.select(*zc), zc)
-        rel = os.path.join("data", f"v{m['version']}-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.root, rel)
         with_bucket = resolved.select(*self.schema.names(), *_HIDDEN).withColumn(
             _BUCKET_COL, rebucket
         )
+        if self.equality_deletes or purge_tombstones:
+            # the resolve above applied every delete entry
+            m["delete_files"] = []
         if self.equality_deletes and not purge_tombstones:
             # consolidate: live rows → base; the surviving tombstone
             # WINNERS (still needed as the stale-re-delivery version
             # guard) → ONE narrow delete file replacing the whole list.
             # Entries superseded by newer upserts lost the fold above
-            # and drop out here naturally. Base files stay dead-row-free
-            # — the mode's contract. ONE materialization feeds both the
-            # tombstone write and the base write below (localCheckpoint,
-            # never .cache() — the wide-payload rule); without the cut
-            # each write re-ran the full resolve fold (review r5).
-            with_bucket = with_bucket.localCheckpoint(eager=True)
-            tomb = with_bucket.filter(
-                F.coalesce(F.col(DELETED_COL), F.lit(False))
+            # and drop out here naturally. ONE materialization feeds both
+            # writes (localCheckpoint, never .cache() — the wide-payload
+            # rule); without the cut each write re-ran the full resolve
+            # fold (review r5).
+            with_bucket = self._split_tombstones(
+                m, with_bucket.localCheckpoint(eager=True)
             )
-            with_bucket = with_bucket.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            )
-            entry = self._write_delete_file(tomb, m)
-            m["delete_files"] = [entry] if entry is not None else []
-        elif purge_tombstones:
-            m["delete_files"] = []
-        self._write_base_files(
-            with_bucket.repartition(n_out, F.col(_BUCKET_COL)), out_dir,
-            manifest=m,
-        )
-        found = self._discover_bucket_dirs(out_dir)
-        stats = self._harvest_stats(out_dir, found)
-        m["buckets"] = {
-            str(b): {
-                "path": os.path.join(rel, f"{_BUCKET_COL}={b}"),
-                "schema_version": m["schema_version"],
-                **({"stats": stats[b]} if stats.get(b) else {}),
-            }
-            for b in found
-        }
         m["deltas"] = []
-        self._refresh_bloom(m, out_dir, rewritten=found, full=True)
-        self._write_manifest(m, expected_parent=m["parent"])
-        return {"version": m["version"], "n_buckets_written": len(m["buckets"])}
+        written = self._rewrite_base(
+            m, with_bucket, {int(b) for b in m["buckets"]}, n_out, full=True
+        )
+        return {**self._commit(m), "n_buckets_written": len(written)}
 
     def _compact_partial(self, sel: list[int], purge_tombstones: bool) -> dict:
         if not sel:
@@ -2149,10 +2098,8 @@ class LakeTable:
         # entries are neither duplicated into rows nor dropped
         resolved = self._resolve(buckets=sel, with_delete_files=False)
         if purge_tombstones:
-            resolved = resolved.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+            resolved = resolved.filter(~_is_tombstone())
         m = self._next_manifest()
-        rel = os.path.join("data", f"v{m['version']}-pc-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.root, rel)
         # bucket ids keep their meaning — carry the stored bucket column
         # through instead of re-hashing (no reshard on the partial path)
         with_bucket = resolved.select(
@@ -2163,29 +2110,10 @@ class LakeTable:
             # FILE, not tombstone rows — the mode's dead-row-free-base
             # contract holds on the partial path too (review r5). One
             # materialization feeds both writes.
-            with_bucket = with_bucket.localCheckpoint(eager=True)
-            tomb = with_bucket.filter(
-                F.coalesce(F.col(DELETED_COL), F.lit(False))
+            with_bucket = self._split_tombstones(
+                m, with_bucket.localCheckpoint(eager=True)
             )
-            with_bucket = with_bucket.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            )
-            entry = self._write_delete_file(tomb, m)
-            if entry is not None:
-                m.setdefault("delete_files", []).append(entry)
-        self._write_base_files(
-            with_bucket.repartition(len(sel), F.col(_BUCKET_COL)), out_dir,
-        )
-        found = self._discover_bucket_dirs(out_dir)
-        stats = self._harvest_stats(out_dir, found)
-        for b in sel:
-            m["buckets"].pop(str(b), None)
-        for b in found:
-            m["buckets"][str(b)] = {
-                "path": os.path.join(rel, f"{_BUCKET_COL}={b}"),
-                "schema_version": m["schema_version"],
-                **({"stats": stats[b]} if stats.get(b) else {}),
-            }
+        written = self._rewrite_base(m, with_bucket, selset, len(sel), tag="pc-")
         new_deltas = []
         for d in m["deltas"]:
             live = self._delta_live_buckets(d)
@@ -2201,10 +2129,7 @@ class LakeTable:
                 continue  # every touched bucket folded — drop the file ref
             new_deltas.append(d2)
         m["deltas"] = new_deltas
-        self._refresh_bloom(m, out_dir, rewritten=found,
-                            removed=selset - found)
-        self._write_manifest(m, expected_parent=m["parent"])
-        return {"version": m["version"], "n_buckets_written": len(found),
+        return {**self._commit(m), "n_buckets_written": len(written),
                 "n_deltas_remaining": len(new_deltas)}
 
     def hot_buckets(self, min_deltas: int = 4) -> list[int]:
@@ -2234,14 +2159,6 @@ class LakeTable:
                 if fn.endswith(".parquet"):
                     found.append(os.path.join(base, fn))
         return sorted(found)
-
-    @staticmethod
-    def _discover_bucket_dirs(out_dir: str) -> set[int]:
-        found = set()
-        for name in os.listdir(out_dir):
-            if name.startswith(f"{_BUCKET_COL}="):
-                found.add(int(name.split("=", 1)[1]))
-        return found
 
     def _record_lineage(
         self,
@@ -2763,8 +2680,7 @@ class LakeTable:
         # would silently re-bind data files written under the old meaning
         m["schema_version"] = max(int(k) for k in m["schemas"]) + 1
         m["schemas"][str(m["schema_version"])] = sch.fields
-        self._write_manifest(m, expected_parent=m["parent"])
-        return {"version": m["version"], "schema_version": m["schema_version"]}
+        return {**self._commit(m), "schema_version": m["schema_version"]}
 
     # ---------------------------------------------------------- rollback
     def rollback(self, to_version: int) -> dict:
@@ -2829,15 +2745,11 @@ class LakeTable:
             m["lineage_rollup"] = json.loads(json.dumps(target["lineage_rollup"]))
         else:
             m.pop("lineage_rollup", None)
-        self._record_lineage(
-            m,
-            f"rollback:{cur}->{to_version}",
+        out = self._commit(
+            m, f"rollback:{cur}->{to_version}",
             offsets={"rolled_back_from": cur, "rolled_back_to": to_version},
-            n_changes=0,
-            extra_metrics=None,
         )
-        self._write_manifest(m, expected_parent=cur)
-        return {"version": m["version"], "restored": to_version, "from": cur}
+        return {**out, "restored": to_version, "from": cur}
 
     # ------------------------------------------- write-audit-publish (WAP)
     # Iceberg WAP analog, and the snapshot-level generalization of the
@@ -2914,7 +2826,7 @@ class LakeTable:
             vpath = os.path.join(self.root, "_manifests", f"v{m['version']}.json")
             with open(vpath) as f:
                 committed = json.load(f)
-            # committed_ts is stamped at publish time by _write_manifest,
+            # committed_ts is stamped at publish time by the commit,
             # so the committed copy NEVER equals the staged bytes on it —
             # compare identity without the stamp
             if {k: v for k, v in committed.items() if k != "committed_ts"} \
@@ -2924,7 +2836,7 @@ class LakeTable:
                 return {"version": m["version"], "wap_id": wap_id,
                         "already_published": True}
         if not rebase or cur == m["parent"]:
-            self._write_manifest(m, expected_parent=m["parent"])
+            self._commit(m)
             os.remove(spath)
             return {"version": m["version"], "wap_id": wap_id}
         return self._publish_rebased(wap_id, m, max_retries)
@@ -2999,7 +2911,7 @@ class LakeTable:
                 return {"wap_id": wap_id, "skipped": True,
                         "version": t.manifest["version"]}
             try:
-                self._write_manifest(nm, expected_parent=nm["parent"])
+                self._commit(nm)
             except ConcurrentCommitError:
                 if attempt == max_retries:
                     raise

@@ -552,3 +552,52 @@ def test_literal_evaluation_launches_no_spark_job(spark, tmp_path):
     assert jobs == 0
     assert len(by_value) == 3 and all(len(p) == 5 for p in by_value.values())
     assert lanes == sorted({ln for p in by_value.values() for ln, _ in p})
+
+
+# Spark jobs per commit on a row-tombstone and an equality-delete table
+# (local[4], 4 buckets, 200-row base, 60-change batch with deletes):
+# (merge, append_delta, partial compact, full compact)
+_COMMIT_JOB_BOUNDS = {False: (14, 1, 6, 6), True: (16, 1, 8, 8)}
+
+
+@pytest.mark.parametrize("eq", [False, True], ids=["row", "eqdel"])
+def test_commit_job_counts(spark, tmp_path, eq, monkeypatch):
+    """Every write path launches at most its pinned number of Spark
+    jobs, and planning a change feed over a window that only appended
+    deltas runs none (the touched buckets come from the delta entries'
+    recorded ``buckets``); that feed equals the full keyed diff."""
+    merge_b, append_b, partial_b, full_b = _COMMIT_JOB_BOUNDS[eq]
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, pk=["k"],
+                         n_buckets=4, equality_deletes=eq)
+    t.merge(_mk(spark, [(k, "a", float(k), "UPSERT", k)
+                        for k in range(200)]), batch_id="base")
+
+    def batch(seq0):
+        return _mk(spark, [(k, "b", k * 2.0, "UPSERT", seq0 + k)
+                           for k in range(0, 80, 2)]
+                   + [(k, None, None, "DELETE", seq0 + k)
+                      for k in range(1, 40, 2)])
+
+    out, jobs = _jobs(spark, lambda: t.refresh().merge(batch(1000),
+                                                       batch_id="m1"))
+    assert out["n_changes"] == 60 and jobs <= merge_b
+    since = t.refresh().manifest["version"]
+    for i in range(3):
+        _, jobs = _jobs(spark, lambda: t.refresh().append_delta(
+            batch(2000 + 100 * i), batch_id=f"d{i}"))
+        assert jobs <= append_b
+    cur = t.refresh()
+    feed, jobs = _jobs(spark, lambda: cur.read_changes(since))
+    assert jobs == 0
+    got = sorted(map(tuple, feed.collect()))
+    monkeypatch.setattr(LakeTable, "_cdf_new_deltas",
+                        staticmethod(lambda old_m, new_m: None))
+    assert got == sorted(map(tuple, cur.read_changes(since).collect()))
+    monkeypatch.undo()
+    want = _state(t)
+    _, jobs = _jobs(spark, lambda: t.refresh().compact(buckets=[0, 1]))
+    assert jobs <= partial_b
+    assert _state(t) == want
+    _, jobs = _jobs(spark, lambda: t.refresh().compact())
+    assert jobs <= full_b
+    assert _state(t) == want

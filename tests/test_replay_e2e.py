@@ -183,7 +183,7 @@ def test_crash_between_data_write_and_commit_replays_clean(spark, tmp_root, monk
     )
     orig = LT._write_manifest
 
-    def boom(self, manifest, expected_parent):
+    def boom(self, manifest):
         raise RuntimeError("simulated crash before manifest commit")
 
     monkeypatch.setattr(LT, "_write_manifest", boom)
