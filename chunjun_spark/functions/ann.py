@@ -83,59 +83,6 @@ def _splitmix64(x: int) -> int:
     return x ^ (x >> 31)
 
 
-def pairwise_above_blocked(
-    df: DataFrame,
-    threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """All (a,b) cosine pairs ≥ threshold via blocked matrix multiply.
-
-    The whole (normalized) matrix broadcasts to every worker; each task
-    multiplies its block of rows against the matrix with one BLAS gemm —
-    ~100× the expression-tree cross-join for dense vectors. Semantics
-    identical to ``pairwise_above`` (a < b, double precision).
-
-    Scale path: fits while n_vectors × dim × 8B broadcasts (~1 GB = 2M
-    ×64d); beyond that, LSH-bucket first (``rp_lsh_buckets``) and run
-    this within buckets.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    mat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    matn = mat / norms[:, None]
-    spark = df.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(matn)
-
-    def gen(batches):
-        all_ids = b_ids.value
-        m = b_mat.value
-        for pdf in batches:
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = 1.0
-            sims = (q / qn[:, None]) @ m.T  # one gemm per Arrow batch
-            out_a, out_b, out_s = [], [], []
-            for i in range(sims.shape[0]):
-                mask = (sims[i] >= threshold) & (all_ids > q_ids[i])
-                hits = np.nonzero(mask)[0]
-                out_a.extend([q_ids[i]] * len(hits))
-                out_b.extend(all_ids[hits])
-                out_s.extend(sims[i][hits])
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim": out_s})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, "id_a long, id_b long, sim double"
-    )
-
-
 def _pair_gemm_batches(
     left_ids, left_vecs, right_ids, right_vecs, threshold: float, self_pair: bool
 ):
@@ -180,6 +127,34 @@ def _normalized_matrix(pdf, id_col: str, vec_col: str):
     return ids, mat / norms[:, None]
 
 
+_PAIRS = "id_a long, id_b long, sim double"
+
+
+def _pairs_frame(batches):
+    """Concatenate gemm batches into one (id_a, id_b, sim) frame; a typed
+    empty frame when no pair cleared the threshold."""
+    import pandas as pd
+
+    out = list(batches)
+    if not out:
+        return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
+            {"id_a": "int64", "id_b": "int64", "sim": "float64"}
+        )
+    return pd.concat(out, ignore_index=True)
+
+
+def _within_scorer(threshold: float):
+    """``applyInPandas`` function scoring every pair inside one group of
+    (_id, _v) rows: one gemm of the group against itself."""
+
+    def score(pdf):
+        ids, vecs = _normalized_matrix(pdf, "_id", "_v")
+        return _pairs_frame(
+            _pair_gemm_batches(ids, vecs, ids, vecs, threshold, True))
+
+    return score
+
+
 def pairwise_above_blockpairs(
     df: DataFrame,
     threshold: float,
@@ -188,9 +163,8 @@ def pairwise_above_blockpairs(
     n_blocks: int | None = None,
     rows_per_block: int = 32_768,
 ) -> DataFrame:
-    """EXACT all-pairs cosine ≥ threshold, fully distributed — the
-    scale-safe replacement for ``pairwise_above_blocked``'s driver
-    ``collect()`` + whole-matrix broadcast.
+    """EXACT all-pairs cosine ≥ threshold, fully distributed: no driver
+    ``collect()`` and no whole-matrix broadcast.
 
     Plan (classic block-pair all-pairs join):
       1. every row hashes to one of B blocks (uniform on id);
@@ -207,8 +181,6 @@ def pairwise_above_blockpairs(
     the price of exactness; for web-scale near-dup prefer
     ``pairwise_above_bucketed`` (shuffle n×(probes+1), approximate).
     """
-    import pandas as pd
-
     if n_blocks is None:
         n_rows = df.count()
         n_blocks = max(1, -(-n_rows // rows_per_block))
@@ -230,28 +202,19 @@ def pairwise_above_blockpairs(
         "_id", "_v", F.explode(pairs).alias("_p")
     ).select("_id", "_v", F.col("_p.pair").alias("_pair"), F.col("_p.is_left").alias("_l"))
 
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pair = int(pdf["_pair"].iloc[0])
-        i, j = divmod(pair, B)
-        if i == j:
-            ids, vecs = _normalized_matrix(pdf, "_id", "_v")
-            out = list(_pair_gemm_batches(ids, vecs, ids, vecs, threshold, True))
-        else:
-            lm = pdf["_l"].to_numpy()
-            lids, lvecs = _normalized_matrix(pdf[lm], "_id", "_v")
-            rids, rvecs = _normalized_matrix(pdf[~lm], "_id", "_v")
-            out = list(
-                _pair_gemm_batches(lids, lvecs, rids, rvecs, threshold, False)
-            )
-        if not out:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "sim": "float64"}
-            )
-        return pd.concat(out, ignore_index=True)
+    within = _within_scorer(threshold)
 
-    return exploded.groupBy("_pair").applyInPandas(
-        compute, "id_a long, id_b long, sim double"
-    )
+    def compute(pdf):
+        i, j = divmod(int(pdf["_pair"].iloc[0]), B)
+        if i == j:
+            return within(pdf)
+        lm = pdf["_l"].to_numpy()
+        lids, lvecs = _normalized_matrix(pdf[lm], "_id", "_v")
+        rids, rvecs = _normalized_matrix(pdf[~lm], "_id", "_v")
+        return _pairs_frame(
+            _pair_gemm_batches(lids, lvecs, rids, rvecs, threshold, False))
+
+    return exploded.groupBy("_pair").applyInPandas(compute, _PAIRS)
 
 
 def rp_planes_for(
@@ -301,8 +264,6 @@ def pairwise_above_bucketed(
     ``groupBy(id_a, id_b)``; sims are bit-identical across buckets (same
     gemm inputs), so ``max`` is a pure dedup.
     """
-    import pandas as pd
-
     if n_planes is None:
         n_planes = rp_planes_for(df.count())
     bucketed = rp_lsh_buckets(df, dim, n_planes, seed, vec_col).select(
@@ -317,18 +278,8 @@ def pairwise_above_bucketed(
         "_id", "_v", F.explode(F.array(*probes)).alias("_probe")
     )
 
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, vecs = _normalized_matrix(pdf, "_id", "_v")
-        out = list(_pair_gemm_batches(ids, vecs, ids, vecs, threshold, True))
-        if not out:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "sim": "float64"}
-            )
-        return pd.concat(out, ignore_index=True)
-
     cand = exploded.groupBy("_probe").applyInPandas(
-        compute, "id_a long, id_b long, sim double"
-    )
+        _within_scorer(threshold), _PAIRS)
     return cand.groupBy("id_a", "id_b").agg(F.max("sim").alias("sim"))
 
 
@@ -685,26 +636,13 @@ def pairwise_above_clustered(
     pairs straddling a cell boundary are not examined. Shuffle volume is
     exactly n vector rows (each vector lands in ONE cell, no multiprobe
     duplication)."""
-    import pandas as pd
-
     assigned = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
         assign_ivf_list(centroids, vec_col).alias("_cell"),
     )
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, vecs = _normalized_matrix(pdf, "_id", "_v")
-        out = list(_pair_gemm_batches(ids, vecs, ids, vecs, threshold, True))
-        if not out:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "sim": "float64"}
-            )
-        return pd.concat(out, ignore_index=True)
-
     return assigned.groupBy("_cell").applyInPandas(
-        compute, "id_a long, id_b long, sim double"
-    )
+        _within_scorer(threshold), _PAIRS)
 
 
 def semantic_dedup(

@@ -277,10 +277,10 @@ def _write_jdbc(df: DataFrame, cfg: JobConfig, metrics: dict) -> None:
             # admit like the streaming relay: poison raises, DDL rows
             # are forwarded (idempotent ALTER), only data rows fold —
             # an un-admitted DDL/ERROR row would upsert a NULL pk
+            from chunjun_spark.operators.merge import admit_batch_with_offsets
             from chunjun_spark.sources.jdbc_live import relay_apply_ddl
-            from chunjun_spark.streaming.pipeline import admit_batch
 
-            df, ddl_rows = admit_batch(df)
+            df, ddl_rows, _, _, _ = admit_batch_with_offsets(df)
             if ddl_rows:
                 relay_apply_ddl(df.sparkSession, conn["url"],
                                 conn["table"], ddl_rows, **common)
@@ -783,6 +783,15 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
                     "fan-out jdbc sinks apply the changelog (writeMode="
                     f"'cdc'); got {wp.get('writeMode')!r}"
                 )
+            hooks = [k for k in ("preSql", "postSql") if wp.get(k)]
+            if hooks:
+                # the fan-out runs no per-sink statements around its
+                # micro-batches: refuse rather than skip them silently
+                raise ValueError(
+                    f"fan-out jdbc sinks do not run {'/'.join(hooks)}; "
+                    "run the statements in a separate job or use a "
+                    "single-writer relay"
+                )
             conn = _jdbc_conn_params(wp)
             sinks.append({
                 "type": "jdbc", "url": conn["url"], "table": conn["table"],
@@ -872,10 +881,7 @@ def run_job(spark: SparkSession, config: JobConfig | dict | str) -> dict:
         wp = cfg.writer.parameter
         if len(cfg.writers) > 1:
             return _run_fanout_stream(spark, cfg, t0)
-        if cfg.writer.name in (
-            "jdbcwriter", "mysqlwriter", "postgresqlwriter",
-            "oraclewriter", "sqlserverwriter",
-        ):
+        if cfg.writer.name in _JDBC_WRITER_NAMES:
             # streaming CDC relay into a live database — the reference's
             # primary realtime shape (binlogreader → jdbcwriter under
             # semantic=exactly-once); every micro-batch lands in ONE

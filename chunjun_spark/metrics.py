@@ -8,59 +8,17 @@ snapshotWrite. The reference pulls global values from the JobMaster on a
 timer (metrics/AccumulatorCollector.java:107-141); on Spark the driver
 sees accumulator totals directly, so the collector thread disappears.
 
-Two surfaces:
-- ``JobMetrics``: named SparkContext accumulators, incremented from the
-  driver (counts are known post-action) — the FormatState metric map
-  analog, snapshotted into lake-table lineage per batch.
-- ``StageTimer``: wall-clock spans for readDuration / writeDuration.
+Surfaces: ``render_prometheus`` renders any flat metric map (``run_job``'s
+result, ``LakeTable.lineage_totals()``) in the Prometheus exposition
+format, and ``StreamMetricsListener`` folds pushed streaming progress
+into per-query totals.
 """
 
 from __future__ import annotations
 
 import re
-import time
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-METRIC_NAMES = [
-    "numRead",
-    "byteRead",
-    "readDuration",
-    "numWrite",
-    "byteWrite",
-    "writeDuration",
-    "nErrors",
-    "nullErrors",
-    "duplicateErrors",
-    "conversionErrors",
-    "otherErrors",
-    "snapshotWrite",
-]
-
-
-class JobMetrics:
-    def __init__(self, spark: SparkSession):
-        sc = spark.sparkContext
-        self._acc = {name: sc.accumulator(0) for name in METRIC_NAMES}
-
-    def add(self, name: str, value: int) -> None:
-        if name not in self._acc:
-            raise KeyError(f"unknown metric {name!r} (docs/statistics.md names)")
-        self._acc[name].add(int(value))
-
-    def snapshot(self) -> dict[str, int]:
-        return {name: acc.value for name, acc in self._acc.items()}
-
-    @contextmanager
-    def timed(self, duration_metric: str):
-        """Accumulate a wall-clock span (ms) into read/writeDuration."""
-        t0 = time.time()
-        try:
-            yield
-        finally:
-            self.add(duration_metric, int((time.time() - t0) * 1000))
-
 
 # --------------------------------------------------- Prometheus exposition
 
@@ -126,8 +84,8 @@ def render_prometheus(
     accumulator to a gateway at job end; here the driver renders the
     same counters for any scraper/pushgateway to consume).
 
-    Accepts ``JobMetrics.snapshot()`` output or any flat metric dict
-    (e.g. ``run_job``'s result, lake ``lineage_totals()``); non-numeric
+    Accepts any flat metric dict (e.g. ``run_job``'s result, lake
+    ``lineage_totals()``); non-numeric
     and private (``_``-prefixed) entries are skipped. Labels (job_id,
     batch_id, ...) attach to every sample; values are escaped per the
     exposition spec."""

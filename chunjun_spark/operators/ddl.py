@@ -27,18 +27,7 @@ from __future__ import annotations
 
 import json
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-
 from chunjun_spark.plans.lake import LakeTable
-
-
-def split_ddl(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(data_events, ddl_events); tolerates streams without a ddl column."""
-    if "ddl" not in events.columns:
-        return events, events.limit(0)
-    is_ddl = F.col("op") == "DDL"
-    return events.filter(~is_ddl), events.filter(is_ddl)
 
 
 def ddl_event(

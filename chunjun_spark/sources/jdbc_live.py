@@ -773,7 +773,7 @@ def apply_changelog_jdbc_exactly_once(
         if "op" in events.columns:
             # control rows are not data: an un-admitted frame (batch job
             # path) folding a DDL/ERROR/DECODE_ERROR row would upsert a
-            # NULL-pk winner — callers that ran admit_batch already
+            # NULL-pk winner — callers that ran admission already
             # stripped these (DECODE_ERROR added r5 with the redo-wire
             # decode-failure class)
             events = events.filter(

@@ -33,7 +33,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from chunjun_spark.operators.dedup import keep_last
-from chunjun_spark.operators.merge import events_with_pk, to_changes
+# InBandFailure is re-exported: stream callers catch it from here
+from chunjun_spark.operators.merge import (  # noqa: F401
+    POISON_OPS,
+    InBandFailure,
+    admit_batch_with_offsets,
+    events_with_pk,
+    null_pk_pred,
+    to_changes,
+)
 from chunjun_spark.plans.lake import LakeTable
 from chunjun_spark.sources.binlog import EVENT_SCHEMA
 
@@ -322,7 +330,7 @@ def start_replay_stream(
             .otherwise(F.lit(ERR_NULL))
             if "op" in batch_df.columns else F.lit(ERR_NULL)
         )
-        rows = batch_df.filter(_null_pk_pred(pk)).select(
+        rows = batch_df.filter(null_pk_pred(pk)).select(
             cls.alias("error_class"),
             F.to_json(F.struct(*[F.col(c) for c in batch_df.columns]))
             .alias("content"),
@@ -404,7 +412,7 @@ def start_replay_stream(
         from chunjun_spark.operators.temporal import sync_scd2_history
 
         df = df.filter(F.col("op").isin("INSERT", "UPDATE", "DELETE"))
-        df = df.filter(~_null_pk_pred(table.pk))
+        df = df.filter(~null_pk_pred(table.pk))
         for s in scd2_tables:
             sync_scd2_history(
                 df, LakeTable.load(spark, s["root"]),
@@ -469,7 +477,7 @@ def start_replay_stream(
         # dirty pass below, and count against the error limits (ADVICE
         # r5: one garbled statement must not wedge the stream forever)
         allow_dec = bool(dirty) and wire_format == "redo_sql"
-        batch_df, ddl_rows, offsets, n_dirty = admit_batch_with_offsets(
+        batch_df, ddl_rows, offsets, n_dirty, _ = admit_batch_with_offsets(
             batch_df, dirty_pk=table.pk if fused_dirty else None,
             poison_ops=("ERROR",) if allow_dec else POISON_OPS,
         )
@@ -479,7 +487,7 @@ def start_replay_stream(
             dirty_totals["read"] += sum(v["n"] for v in offsets.values())
         if n_dirty:
             _capture_dirty(batch_df, table.pk, n_dirty)
-            batch_df = batch_df.filter(~_null_pk_pred(table.pk))
+            batch_df = batch_df.filter(~null_pk_pred(table.pk))
         if ddl_rows:
             # DDLs first: all evolution ops are backward compatible, and
             # apply_ddl_events is idempotent under micro-batch re-delivery
@@ -494,10 +502,10 @@ def start_replay_stream(
 
             batch_df = decode_redo_payload(batch_df, table.schema.to_struct())
         if dirty and not fused_dirty:
-            n_dirty_post = batch_df.filter(_null_pk_pred(table.pk)).count()
+            n_dirty_post = batch_df.filter(null_pk_pred(table.pk)).count()
             if n_dirty_post:
                 _capture_dirty(batch_df, table.pk, n_dirty_post)
-                batch_df = batch_df.filter(~_null_pk_pred(table.pk))
+                batch_df = batch_df.filter(~null_pk_pred(table.pk))
         keyed = events_with_pk(batch_df, table.pk)
         if update_mode == "patch":
             changes = to_changes(keyed)  # fold happens inside the merge
@@ -628,9 +636,11 @@ def start_multi_table_stream(
     factory = table_factory or default_factory
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # one narrow aggregate: poison + per-table DDL + routing list +
-        # per-table FormatState offsets
-        batch_df, names, ddl_rows, offsets_by_table = admit_multi_batch(batch_df)
+        # one narrow aggregate: poison + per-table DDL + routing list
+        # (the tables with data rows) + per-table FormatState offsets
+        batch_df, ddl_rows, _, _, offsets_by_table = (
+            admit_batch_with_offsets(batch_df))
+        names = sorted(offsets_by_table)
         has_data = set(names)
         # a table whose only rows this batch are DDL still needs the DDL
         # applied NOW — the checkpoint commits this batch, so the DDL
@@ -717,7 +727,7 @@ def start_jdbc_relay_stream(
     spark = events.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df, ddl_rows, offsets, _ = admit_batch_with_offsets(batch_df)
+        batch_df, ddl_rows, offsets, _, _ = admit_batch_with_offsets(batch_df)
         if ddl_rows:
             _relay_apply_ddl(spark, url, table, ddl_rows,
                              driver, user, password)
@@ -870,7 +880,7 @@ def start_fanout_stream(
                 pending.append(i)  # jdbc guard is a driver round-trip
         if not pending:
             return
-        batch_df, ddl_rows, offsets, _ = admit_batch_with_offsets(batch_df)
+        batch_df, ddl_rows, offsets, _, _ = admit_batch_with_offsets(batch_df)
         n_read = sum(v["n"] for v in offsets.values())
 
         # fold once per distinct pk; every sink with that pk shares the
@@ -1038,263 +1048,6 @@ class MicroBatchAuditFailure(RuntimeError):
     """A micro-batch failed its WAP audits; its staged snapshot was
     abandoned and the query stops (re-delivery re-fails by design —
     bad data needs an upstream fix or changed audits)."""
-
-
-class InBandFailure(RuntimeError):
-    """Reference: the heartbeat controller injects an ``{"e": msg}`` event
-    in-band and the reader throws on receipt (HeartBeatController.java:
-    51-61, BinlogEventSink.java:162-166)."""
-
-
-# ops that fail the stream at admission. DECODE_ERROR (a wire row the
-# decoder could not parse — redo_sql wire) is poison BY DEFAULT, but a
-# caller with a dirty/DLQ plane configured passes ("ERROR",) so those
-# rows route to the DLQ under the error limits instead of wedging the
-# stream on an unskippable restart loop (review r5); op='ERROR' — the
-# source's own in-band failure signal — is always poison.
-POISON_OPS = ("ERROR", "DECODE_ERROR")
-
-
-def raise_on_poison(
-    batch_df: DataFrame, poison_ops: tuple = POISON_OPS
-) -> None:
-    if "op" not in batch_df.columns:
-        return
-    poison = (
-        batch_df.filter(F.col("op").isin(list(poison_ops)))
-        .limit(1).collect()
-    )
-    if poison:
-        r = poison[0]
-        msg = r["ddl"] if "ddl" in batch_df.columns and r["ddl"] else "source error"
-        if r["op"] == "DECODE_ERROR":
-            msg = "undecodable wire statement (no dirty plane configured)"
-        raise InBandFailure(f"in-band source failure event: {msg}")
-
-
-def _null_pk_pred(pk: list[str]):
-    """Data row whose effective key (before-image for DELETE, after-image
-    otherwise — the events_with_pk convention) has a NULL component.
-    Struct-field access only, so nested schema pruning keeps this
-    narrow."""
-    is_del = F.col("op") == "DELETE"
-    pred = F.lit(False)
-    for c in pk:
-        eff = F.when(is_del, F.col(f"before.{c}")).otherwise(
-            F.col(f"after.{c}"))
-        pred = pred | eff.isNull()
-    return pred & ~F.col("op").isin("ERROR", "DDL")
-
-
-def admit_batch_with_offsets(
-    batch_df: DataFrame,
-    dirty_pk: list[str] | None = None,
-    poison_ops: tuple = POISON_OPS,
-) -> tuple[DataFrame, list[dict], dict, int]:
-    """Fused micro-batch admission + FormatState offsets: ONE narrow
-    aggregation job yields the per-partition (max offset, count), the
-    poison/DDL control rows, and therefore numRead — where
-    ``admit_batch`` followed by ``partition_offsets`` cost two separate
-    source scans per micro-batch. With the payload pruned out of both,
-    the per-trigger source evaluations drop from 4 to 3 (this fused
-    narrow pass + keep_last's winner-agg side + the one wide payload
-    pass the write performs) — measured via StreamingQueryListener
-    numInputRows, which counts every source re-read in a trigger.
-
-    ``dirty_pk``: also count data rows whose effective key has a NULL
-    component (the DirtyDataManager ERR_NULL_POINTER class) — riding the
-    SAME fused aggregate, so the dirty detector costs no extra source
-    evaluation. The rows themselves are only re-scanned by the caller
-    when the count is non-zero (the rare path).
-
-    Falls back to the two-pass path for frames without the
-    partition_id/offset columns. Offsets here include control rows'
-    offsets (a restore must not re-deliver a consumed DDL); counts
-    exclude them, matching the previous numRead semantics.
-    """
-    cols = set(batch_df.columns)
-    if "op" not in cols or not {"partition_id", "offset"} <= cols:
-        from chunjun_spark.operators.merge import partition_offsets
-
-        df, ddl_rows = admit_batch(batch_df, poison_ops=poison_ops)
-        n_dirty = (
-            df.filter(_null_pk_pred(dirty_pk)).count() if dirty_pk else 0
-        )
-        return df, ddl_rows, partition_offsets(df), n_dirty
-    narrow = [c for c in ("op", "table_name", "op_ts", "seq", "ddl")
-              if c in cols]
-    is_ctrl = F.col("op").isin("ERROR", "DDL")
-    aggs = [
-        F.max("offset").alias("max_offset"),
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(is_ctrl, 1)).alias("n_ctrl"),
-        # existence ONLY for decode errors: they can be arbitrarily many
-        # (a whole garbled segment), so never collect them to the driver
-        F.count(F.when(F.col("op") == "DECODE_ERROR", 1)).alias("n_dec"),
-        F.collect_list(
-            F.when(is_ctrl, F.struct(*[F.col(c) for c in narrow]))
-        ).alias("ctrl"),
-    ]
-    if dirty_pk:
-        aggs.append(
-            F.count(F.when(_null_pk_pred(dirty_pk), 1)).alias("n_dirty")
-        )
-    rows = batch_df.groupBy("partition_id").agg(*aggs).collect()
-    n_dirty = sum(r["n_dirty"] for r in rows) if dirty_pk else 0
-    offsets = {
-        str(r["partition_id"]): {
-            "max_offset": r["max_offset"], "n": r["n"] - r["n_ctrl"]
-        }
-        for r in rows
-    }
-    ctrl = sorted(
-        (c.asDict() for r in rows for c in r["ctrl"]),
-        key=lambda d: d.get("seq") if d.get("seq") is not None else -1,
-    )
-    for c in ctrl:
-        if c["op"] == "ERROR":
-            raise InBandFailure(
-                f"in-band source failure event: {c['ddl'] or 'source error'}"
-            )
-    if "DECODE_ERROR" in poison_ops and any(r["n_dec"] for r in rows):
-        raise InBandFailure(
-            "in-band source failure event: "
-            f"{sum(r['n_dec'] for r in rows)} undecodable wire statement"
-            " row(s) (no dirty plane configured)"
-        )
-    ddl_rows = [c for c in ctrl if c["op"] == "DDL"]
-    data = batch_df.filter(F.col("op") != "DDL") if ddl_rows else batch_df
-    return data, ddl_rows, offsets, n_dirty
-
-
-def admit_batch(
-    batch_df: DataFrame, poison_ops: tuple = POISON_OPS
-) -> tuple[DataFrame, list[dict]]:
-    """Single-pass micro-batch admission: poison detection + DDL
-    extraction in ONE narrow job.
-
-    The previous shape evaluated every micro-batch up to three times —
-    poison ``filter().limit(1).collect()`` (a full scan whenever no
-    poison exists, i.e. always), ``ddl.collect()``, then the write — and
-    for a file-stream source each evaluation re-reads the input files
-    (round-2 verdict, scale-killer #2). Here control rows (``op`` in
-    ERROR/DDL) are collected once through a narrow projection — column
-    pruning keeps the payload columns out of the scan, and the IN-filter
-    pushes to the source — so the batch costs one narrow pre-pass plus
-    the single wide evaluation the write itself performs.
-
-    Returns ``(data_events, ddl_rows)``; raises :class:`InBandFailure`
-    if the batch carries an ``op='ERROR'`` event (the reference's
-    in-band heartbeat failure). Tolerates streams without ``op`` or
-    ``ddl`` columns (no control rows to find, zero jobs run).
-    """
-    if "op" not in batch_df.columns:
-        return batch_df, []
-    has_ddl = "ddl" in batch_df.columns
-    if not has_ddl:
-        # poison is the only control class to look for
-        raise_on_poison(batch_df, poison_ops=poison_ops)
-        return batch_df, []
-    narrow = [c for c in ("op", "table_name", "op_ts", "seq", "ddl")
-              if c in batch_df.columns]
-    # ONE narrow job, bounded collect: ERROR/DDL rows are genuinely rare
-    # control rows; DECODE_ERROR rows can be arbitrarily many (a whole
-    # garbled segment, each carrying statement text) so they ride an
-    # existence count + one sample, never an unbounded collect (review
-    # r5 — same rule as the fused admission path)
-    is_rare_ctrl = F.col("op").isin("ERROR", "DDL")
-    [agg] = batch_df.groupBy().agg(
-        F.collect_list(
-            F.when(is_rare_ctrl, F.struct(*[F.col(c) for c in narrow]))
-        ).alias("ctrl"),
-        F.count(F.when(F.col("op") == "DECODE_ERROR", 1)).alias("n_dec"),
-        F.max(
-            F.when(F.col("op") == "DECODE_ERROR", F.col("ddl"))
-        ).alias("dec_sample"),
-    ).collect()
-    for r in agg["ctrl"]:
-        if r["op"] in poison_ops:
-            raise InBandFailure(
-                f"in-band source failure event: {r['ddl'] or 'source error'}"
-            )
-    if "DECODE_ERROR" in poison_ops and agg["n_dec"]:
-        raise InBandFailure(
-            "in-band source failure event: "
-            f"{agg['n_dec']} undecodable wire statement row(s) (no dirty "
-            f"plane configured); e.g. {str(agg['dec_sample'])[:200]!r}"
-        )
-    ddl_rows = sorted(
-        (r.asDict() for r in agg["ctrl"] if r["op"] == "DDL"),
-        key=lambda d: d.get("seq") if d.get("seq") is not None else -1,
-    )
-    return batch_df.filter(F.col("op") != "DDL"), ddl_rows
-
-
-def admit_multi_batch(
-    batch_df: DataFrame,
-) -> tuple[DataFrame, list[str], list[dict], dict]:
-    """Multi-table admission in ONE narrow job: poison + per-table DDL +
-    the distinct table-name routing list + per-(table, partition)
-    FormatState offsets (previously four separate scans: poison collect,
-    ddl collect, ``distinct().collect()``, and one ``partition_offsets``
-    scan PER TABLE — O(#tables) extra source evaluations per trigger).
-
-    One narrow aggregate (group by (table_name, partition_id) over
-    op/ddl/offset only — #tables × #channels rows out) yields everything
-    the router needs; the payload columns are never loaded. Returns
-    ``(data_events, sorted_names, ddl_rows, offsets_by_table)`` where
-    ``offsets_by_table[name]`` has ``partition_offsets`` shape (data
-    rows only, matching the pre-fusion numRead semantics).
-    """
-    has_off = {"partition_id", "offset"} <= set(batch_df.columns)
-    ddl_struct = F.when(
-        F.col("op") == "DDL",
-        F.struct("op", "table_name", "op_ts", "seq", "ddl"),
-    )
-    is_data = ~F.col("op").isin("DDL", "ERROR")
-    group = ["table_name", "partition_id"] if has_off else ["table_name"]
-    aggs = [
-        # DECODE_ERROR is always poison on the multi-table path (no
-        # per-table DLQ integration there — fail loud, review r5)
-        F.max(
-            F.when(F.col("op").isin("ERROR", "DECODE_ERROR"),
-                   F.coalesce(F.col("ddl"), F.lit("source error")))
-        ).alias("poison"),
-        # has_data gates MERGE + offset recording; tables seeing only
-        # DDL this batch must still be routed by the caller for the DDL
-        # apply — the checkpoint commits the batch either way, so an
-        # unapplied DDL would be lost forever (later JSON payloads would
-        # silently decode against the stale schema)
-        F.max(is_data).alias("has_data"),
-        F.collect_list(ddl_struct).alias("ddls"),  # nulls are skipped
-    ]
-    if has_off:
-        aggs += [
-            # high-water includes consumed DDL offsets (a restore must
-            # not re-deliver a consumed DDL — same contract as the
-            # single-table admission); n counts data rows only (numRead)
-            F.max(F.when(F.col("op") != "ERROR", F.col("offset"))
-                  ).alias("max_offset"),
-            F.count(F.when(is_data, 1)).alias("n"),
-        ]
-    ctrl = batch_df.groupBy(*group).agg(*aggs).collect()
-    for r in ctrl:
-        if r["poison"] is not None:
-            raise InBandFailure(f"in-band source failure event: {r['poison']}")
-    names = sorted({r["table_name"] for r in ctrl if r["has_data"]})
-    ddl_rows = [d.asDict() for r in ctrl for d in r["ddls"]]
-    offsets_by_table: dict = {}
-    if has_off:
-        for r in ctrl:
-            # keyed per (table, partition): a partition whose only row
-            # for this table is a DDL still contributes its consumed
-            # offset to the table's high-water (has_data alone would
-            # drop it and a restore would re-deliver the DDL)
-            if r["table_name"] in names and r["max_offset"] is not None:
-                offsets_by_table.setdefault(r["table_name"], {})[
-                    str(r["partition_id"])
-                ] = {"max_offset": r["max_offset"], "n": r["n"]}
-    return batch_df.filter(F.col("op") != "DDL"), names, ddl_rows, offsets_by_table
 
 
 def run_stream_with_restart(

@@ -162,18 +162,6 @@ def test_pairwise_above_threshold(vecs):
         assert (r["id_a"] % 2) == (r["id_b"] % 2)  # only intra-cluster
 
 
-def test_pairwise_blocked_matches_expression(vecs):
-    exact = {
-        (r["id_a"], r["id_b"], round(r["sim"], 9))
-        for r in ANN.pairwise_above(vecs, threshold=0.9).collect()
-    }
-    blocked = {
-        (r["id_a"], r["id_b"], round(r["sim"], 9))
-        for r in ANN.pairwise_above_blocked(vecs, threshold=0.9).collect()
-    }
-    assert exact == blocked
-
-
 def test_pairwise_blockpairs_matches_expression(vecs):
     """The distributed block-pair gemm (no collect, no broadcast) is EXACT:
     identical pair set + 9-decimal sims vs the expression cross-join."""

@@ -601,3 +601,36 @@ def test_commit_job_counts(spark, tmp_path, eq, monkeypatch):
     _, jobs = _jobs(spark, lambda: t.refresh().compact())
     assert jobs <= full_b
     assert _state(t) == want
+
+
+# Spark jobs one merge.replay of a binlog window with a DDL runs: the
+# admission aggregate (poison, DDL, offsets) plus the COW merge.
+_REPLAY_JOB_BOUND = 15
+
+
+def test_replay_job_count(spark, tmp_path):
+    """``merge.replay`` admits its window in one narrow aggregate, and
+    the consumed DDL's offset counts toward the partition high-water."""
+    import datetime
+
+    from chunjun_spark.operators.ddl import ddl_event
+    from chunjun_spark.operators.merge import replay
+    from chunjun_spark.sources.binlog import (
+        EVENT_SCHEMA,
+        PAYLOAD_SCHEMA,
+        generate_binlog,
+    )
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAYLOAD_SCHEMA,
+                         pk=["repo", "path"], n_buckets=4)
+    ddl = spark.createDataFrame(
+        [ddl_event(10_000, datetime.datetime(2030, 1, 1), "add_column",
+                   name="stars", type="int")], EVENT_SCHEMA)
+    events = generate_binlog(spark, 400, n_partitions=2).unionByName(ddl)
+    out, jobs = _jobs(spark, lambda: replay(events, t, batch_id="b0"))
+    assert out["n_changes"] > 0 and jobs <= _REPLAY_JOB_BOUND
+    t = t.refresh()
+    assert "stars" in t.schema.to_struct().fieldNames()
+    lin = t.manifest["lineage"]["b0"]
+    assert lin["offsets"]["0"]["max_offset"] == 10_000
+    assert lin["metrics"]["numRead"] == 400

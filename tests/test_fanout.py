@@ -173,6 +173,29 @@ def test_fanout_validation(spark, tmp_root):
                   "update_mode": "patch"}], tmp_root + "/c", "j")
 
 
+@pytest.mark.parametrize("hook", ["preSql", "postSql"])
+def test_fanout_jdbc_sink_refuses_sql_hooks(spark, tmp_root, hook):
+    """A fan-out jdbc writer carrying preSql/postSql fails at config
+    time: the fan-out runs no per-sink statements, so they would be
+    skipped silently."""
+    jdbc = {"url": "jdbc:derby:memory:unused", "table": "mart",
+            "updateKey": PK, hook: ["DELETE FROM mart"]}
+    job = {"job": {
+        "content": [{
+            "reader": {"name": "binlogreader",
+                       "parameter": {"path": tmp_root}},
+            "writer": [
+                {"name": "hudiwriter",
+                 "parameter": {"path": os.path.join(tmp_root, "lake")}},
+                {"name": "jdbcwriter", "parameter": jdbc},
+            ],
+        }],
+        "setting": {"restore": {"isStream": True}},
+    }}
+    with pytest.raises(ValueError, match=hook):
+        run_job(spark, job)
+
+
 def test_fanout_job_json_two_lakes_and_mart(spark, tmp_root):
     """writer as a LIST in the job JSON: lake (cow) + lake (mor) + JDBC
     mart, one source read."""

@@ -924,3 +924,27 @@ def test_batch_dirty_plane_on_changelog_frame(spark, tmp_root):
     assert captured.count() >= n_bad
     t = LakeTable.load(spark, lake)
     assert t.read().filter(F.col("path").isNull()).count() == 0
+
+
+def test_batch_lakewriter_refuses_in_band_failure(spark, tmp_root):
+    """A batch binlog -> lakewriter job admits its window: an op='ERROR'
+    event fails the job and commits nothing (no all-NULL row)."""
+    from chunjun_spark.sources.binlog import generate_binlog
+    from chunjun_spark.streaming.pipeline import InBandFailure
+
+    from .test_replay_e2e import _control_row
+
+    binlog = os.path.join(tmp_root, "binlog")
+    lake = os.path.join(tmp_root, "lake")
+    err = _control_row(spark, "ERROR", 10_000, "source lost its position")
+    generate_binlog(spark, 200, n_partitions=2).unionByName(err).write.parquet(
+        binlog)
+    cfg = {"job": {"content": [{
+        "reader": {"name": "binlogreader", "parameter": {"path": binlog}},
+        "writer": {"name": "lakewriter",
+                   "parameter": {"path": lake, "pk": ["repo", "path"]}},
+    }]}}
+    with pytest.raises(InBandFailure, match="lost its position"):
+        run_job(spark, cfg)
+    t = LakeTable.load(spark, lake)
+    assert t.committed_batches() == set() and t.read().count() == 0

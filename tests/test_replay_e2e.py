@@ -216,3 +216,33 @@ def test_lineage_offsets_recorded(spark, tmp_root):
     assert set(lin["offsets"].keys()) == {"0", "1", "2", "3"}
     assert lin["metrics"]["numRead"] == 8000
     assert sum(v["n"] for v in lin["offsets"].values()) == 8000
+
+
+def _control_row(spark, op, seq, text):
+    """One in-band control event on the binlog wire (no images)."""
+    import datetime
+
+    from chunjun_spark.sources.binlog import EVENT_SCHEMA
+
+    return spark.createDataFrame([{
+        "op": op, "schema_name": "lake", "table_name": "repo_files",
+        "op_ts": datetime.datetime(2030, 1, 1), "seq": seq,
+        "snowflake_ts": None, "partition_id": 0, "offset": seq,
+        "before": None, "after": None, "ddl": text,
+    }], EVENT_SCHEMA)
+
+
+@pytest.mark.parametrize("op", ["ERROR", "DECODE_ERROR"])
+def test_replay_refuses_in_band_failure(spark, tmp_root, op):
+    """Batch replay admits like the stream: an in-band failure event or
+    an undecodable wire row fails the replay before anything commits,
+    instead of folding into an all-NULL upsert."""
+    from chunjun_spark.streaming.pipeline import InBandFailure
+
+    table = _empty_table(spark, tmp_root)
+    events = generate_binlog(spark, 200, n_partitions=2).unionByName(
+        _control_row(spark, op, 10_000, "boom"))
+    with pytest.raises(InBandFailure):
+        replay(events, table, batch_id="b0")
+    assert table.refresh().committed_batches() == set()
+    assert table.refresh().read().count() == 0

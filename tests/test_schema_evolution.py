@@ -8,7 +8,8 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
-from chunjun_spark.operators.ddl import apply_ddl_events, ddl_event, split_ddl
+from chunjun_spark.operators.ddl import apply_ddl_events, ddl_event
+from chunjun_spark.operators.merge import admit_batch_with_offsets
 from chunjun_spark.operators.merge import replay
 from chunjun_spark.plans.lake import LakeTable
 
@@ -208,9 +209,9 @@ def test_split_ddl(spark):
         ],
         _event_schema(),
     )
-    data, ddl = split_ddl(df)
-    assert data.count() == 1 and ddl.count() == 1
-    assert ddl.collect()[0]["op"] == "DDL"
+    data, ddl_rows, *_ = admit_batch_with_offsets(df)
+    assert data.count() == 1 and len(ddl_rows) == 1
+    assert ddl_rows[0]["op"] == "DDL"
 
 
 def test_streaming_ddl_evolution(spark, tmp_root):

@@ -479,7 +479,7 @@ def test_admit_batch_one_source_evaluation(spark):
     ]
     acc = spark.sparkContext.accumulator(0)
     df = _counted_batch(spark, rows, acc)
-    data, ddl_rows = pl.admit_batch(df)
+    data, ddl_rows, *_ = pl.admit_batch_with_offsets(df)
     assert acc.value == len(rows), (
         f"admission evaluated the source {acc.value / len(rows):.1f} times"
     )
@@ -496,14 +496,14 @@ def test_admit_batch_poison_raises_and_tolerates_missing_cols(spark):
                                                  ddl="boom")]
     df = spark.createDataFrame(rows, SCHEMA)
     with pytest.raises(pl.InBandFailure, match="boom"):
-        pl.admit_batch(df)
+        pl.admit_batch_with_offsets(df)
     # no op column -> no control rows, zero evaluations, frame passes through
     acc = spark.sparkContext.accumulator(0)
     rdd = spark.sparkContext.parallelize([(1, "x")], 1).map(
         lambda r: (acc.add(1), r)[1]
     )
     plain = spark.createDataFrame(rdd, "id long, v string")
-    out, ddl_rows = pl.admit_batch(plain)
+    out, ddl_rows, *_ = pl.admit_batch_with_offsets(plain)
     assert ddl_rows == [] and out is plain
     assert acc.value == 0
 
@@ -527,7 +527,8 @@ def test_admit_multi_batch_one_source_evaluation(spark):
     ]
     acc = spark.sparkContext.accumulator(0)
     df = _counted_batch(spark, rows, acc)
-    data, names, ddl_rows, offsets = pl.admit_multi_batch(df)
+    data, ddl_rows, _, _, offsets = pl.admit_batch_with_offsets(df)
+    names = sorted(offsets)
     assert acc.value == len(rows), (
         f"admission evaluated the source {acc.value / len(rows):.1f} times"
     )
@@ -559,7 +560,8 @@ def test_admit_multi_batch_ddl_only_partition_keeps_offset(spark):
     # move the DDL row to partition 1
     rows[1] = rows[1][:5] + (1,) + rows[1][6:]
     df = spark.createDataFrame(rows, SCHEMA)
-    _, names, ddl_rows, offsets = pl.admit_multi_batch(df)
+    _, ddl_rows, _, _, offsets = pl.admit_batch_with_offsets(df)
+    names = sorted(offsets)
     assert names == ["ta"] and [r["seq"] for r in ddl_rows] == [9]
     assert offsets["ta"]["0"] == {"max_offset": 1, "n": 1}
     assert offsets["ta"]["1"] == {"max_offset": 9, "n": 0}
@@ -570,7 +572,7 @@ def test_admit_multi_batch_poison(spark):
             _ev("ERROR", 2, "tb", "r", None, ddl="kaput")]
     df = spark.createDataFrame(rows, SCHEMA)
     with pytest.raises(pl.InBandFailure, match="kaput"):
-        pl.admit_multi_batch(df)
+        pl.admit_batch_with_offsets(df)
 
 
 def test_stream_metrics_listener(spark, tmp_root):
