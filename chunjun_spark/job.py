@@ -761,38 +761,47 @@ _JDBC_WRITER_NAMES = (
 
 
 def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
-    """Streaming fan-out: content[0].writer given as a LIST. One binlog
-    read + one keep_last fold land in every sink, each exactly-once
-    (start_fanout_stream). Lake sinks take the lakewriter parameter
-    shape; jdbcwriter-family sinks take the relay shape (writeMode=cdc
-    implied — fan-out IS the changelog apply)."""
+    """Streaming fan-out: content[0].writer given as a LIST, or a single
+    jdbcwriter (the binlog → database relay, a one-sink fan-out). One
+    binlog read + one keep_last fold land in every sink, each
+    exactly-once (start_fanout_stream). Lake sinks take the lakewriter
+    parameter shape; jdbcwriter-family sinks take the relay shape
+    (writeMode=cdc implied — fan-out IS the changelog apply), and their
+    preSql runs once per JOB and their postSql after the stream
+    drains."""
     import hashlib as _hashlib
 
+    from chunjun_spark.sources.jdbc_live import (
+        any_batch_applied,
+        ensure_audit_table,
+        execute_sql,
+    )
     from chunjun_spark.streaming.pipeline import (
         read_binlog_stream,
         start_fanout_stream,
     )
 
+    if cfg.restore.from_lineage:
+        raise ValueError(
+            "restoreFromLineage needs a single lake sink (a JDBC or topic "
+            "target keeps batch markers, not per-partition offsets)"
+        )
     p = cfg.reader.parameter
     sinks = []
+    jdbc_sinks = []  # (conn params, writer parameter) per jdbc sink
     for w in cfg.writers:
         wp = w.parameter
         if w.name in _JDBC_WRITER_NAMES:
             if wp.get("writeMode", "cdc") != "cdc":
+                # keep_last folding would silently drop all but the
+                # last event per key — refuse rather than reinterpret
                 raise ValueError(
-                    "fan-out jdbc sinks apply the changelog (writeMode="
-                    f"'cdc'); got {wp.get('writeMode')!r}"
-                )
-            hooks = [k for k in ("preSql", "postSql") if wp.get(k)]
-            if hooks:
-                # the fan-out runs no per-sink statements around its
-                # micro-batches: refuse rather than skip them silently
-                raise ValueError(
-                    f"fan-out jdbc sinks do not run {'/'.join(hooks)}; "
-                    "run the statements in a separate job or use a "
-                    "single-writer relay"
+                    "streaming jdbcwriter supports writeMode='cdc' only "
+                    f"(got {wp.get('writeMode')!r}); run other write "
+                    "modes as batch jobs or sink to a lake"
                 )
             conn = _jdbc_conn_params(wp)
+            jdbc_sinks.append((conn, wp))
             sinks.append({
                 "type": "jdbc", "url": conn["url"], "table": conn["table"],
                 "pk": wp.get("updateKey") or wp.get("pk"),
@@ -844,11 +853,28 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
             or f"{s['url']}/{s['table']}" for s in sinks
         ).encode()
     ).hexdigest()[:10]
+    # a single-jdbcwriter relay keeps its own default checkpoint name,
+    # so a deployed relay resumes from its existing source log
+    kind = "relay" if len(sinks) == 1 and jdbc_sinks else "fanout"
+    for conn, wp in jdbc_sinks:
+        if not wp.get("preSql"):
+            continue
+        # run-once-per-JOB, not per-attempt: a crash-restart resumes
+        # committed progress, and re-running a non-idempotent preSql
+        # (TRUNCATE/DELETE) would destroy the rows already applied. The
+        # sink's audit table is the restart detector — any batch marker
+        # for this job_id means the first attempt got past preSql
+        # (markers commit atomically with each batch's rows).
+        common = {"driver": conn["driver"], "user": conn["user"],
+                  "password": conn["password"]}
+        ensure_audit_table(spark, conn["url"], **common)
+        if not any_batch_applied(spark, conn["url"], cfg.job_id, **common):
+            execute_sql(spark, conn["url"], list(wp["preSql"]), **common)
     metrics: dict = {}
     q = start_fanout_stream(
         events, sinks,
         checkpoint_dir=cfg.restore.checkpoint_dir
-        or f"{p['path'].rstrip('/')}_fanout_ckpt_{sink_id}",
+        or f"{p['path'].rstrip('/')}_{kind}_ckpt_{sink_id}",
         job_id=cfg.job_id,
         metrics_out=metrics,
         catalog_root=catalog_root,
@@ -856,6 +882,11 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
     if not q.awaitTermination(600):
         q.stop()
         raise TimeoutError("fan-out stream did not drain in time")
+    for conn, wp in jdbc_sinks:
+        if wp.get("postSql"):
+            execute_sql(spark, conn["url"], list(wp["postSql"]),
+                        driver=conn["driver"], user=conn["user"],
+                        password=conn["password"])
     # relay metrics contract: numRead/numWrite count THIS run's applied
     # batches — replay-skips and lifetime lineage totals add zero
     return {
@@ -879,95 +910,8 @@ def run_job(spark: SparkSession, config: JobConfig | dict | str) -> dict:
         # realtime path: binlog dir → Structured Streaming foreachBatch
         p = cfg.reader.parameter
         wp = cfg.writer.parameter
-        if len(cfg.writers) > 1:
+        if len(cfg.writers) > 1 or cfg.writer.name in _JDBC_WRITER_NAMES:
             return _run_fanout_stream(spark, cfg, t0)
-        if cfg.writer.name in _JDBC_WRITER_NAMES:
-            # streaming CDC relay into a live database — the reference's
-            # primary realtime shape (binlogreader → jdbcwriter under
-            # semantic=exactly-once); every micro-batch lands in ONE
-            # audited transaction keyed by its batch id
-            import hashlib as _hashlib
-
-            from chunjun_spark.sources.jdbc_live import execute_sql
-            from chunjun_spark.streaming.pipeline import (
-                read_binlog_stream,
-                start_jdbc_relay_stream,
-            )
-
-            if wp.get("writeMode", "cdc") != "cdc":
-                # keep_last folding would silently drop all but the
-                # last event per key — refuse rather than reinterpret
-                raise ValueError(
-                    "streaming jdbcwriter supports writeMode='cdc' only "
-                    f"(got {wp.get('writeMode')!r}); run other write "
-                    "modes as batch jobs or sink to a lake"
-                )
-            if cfg.restore.from_lineage:
-                raise ValueError(
-                    "restoreFromLineage needs a lake sink (a JDBC target "
-                    "keeps batch markers, not per-partition offsets)"
-                )
-            conn = _jdbc_conn_params(wp)
-            common = {"driver": conn["driver"], "user": conn["user"],
-                      "password": conn["password"]}
-            if wp.get("preSql"):
-                # run-once-per-JOB, not per-attempt: a crash-restart
-                # resumes committed progress, and re-running a
-                # non-idempotent preSql (TRUNCATE/DELETE) would destroy
-                # the rows already applied. The relay's own audit table
-                # is the restart detector — any batch marker for this
-                # job_id means the first attempt got past preSql
-                # (markers commit atomically with each batch's rows).
-                from chunjun_spark.sources.jdbc_live import (
-                    any_batch_applied,
-                    ensure_audit_table,
-                )
-
-                ensure_audit_table(spark, conn["url"], **common)
-                if not any_batch_applied(spark, conn["url"], cfg.job_id,
-                                         **common):
-                    execute_sql(spark, conn["url"], list(wp["preSql"]),
-                                **common)
-            events = read_binlog_stream(spark, p["path"])
-            if p.get("cat") or p.get("table") or p.get("filter"):
-                from chunjun_spark.sources.binlog import filter_events
-
-                events = filter_events(
-                    events, cat=p.get("cat"), table=p.get("table"),
-                    table_filter=p.get("filter"),
-                )
-            stream_metrics: dict = {}
-            # default checkpoint is derived from source path + target
-            # identity — a bare table name relative to cwd would make
-            # unrelated jobs silently share a file-source log
-            sink_id = _hashlib.md5(
-                (conn["url"] + "/" + conn["table"]).encode()
-            ).hexdigest()[:10]
-            q = start_jdbc_relay_stream(
-                events, conn["url"], conn["table"],
-                checkpoint_dir=cfg.restore.checkpoint_dir
-                or f"{p['path'].rstrip('/')}_relay_ckpt_{sink_id}",
-                job_id=cfg.job_id,
-                pk=wp.get("updateKey") or wp.get("pk"),
-                batch_size=int(wp.get("batchSize", 1000)),
-                metrics_out=stream_metrics,
-                **common,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError("relay stream did not drain in time")
-            if wp.get("postSql"):
-                execute_sql(spark, conn["url"], list(wp["postSql"]),
-                            **common)
-            return {
-                "numRead": stream_metrics.get("numRead", 0),
-                "numBatches": stream_metrics.get("numBatches", 0),
-                # rows actually touched by THIS run's applies — a rerun
-                # whose batches all replay-skip writes 0
-                "numWrite": stream_metrics.get("numWrite", 0),
-                "nErrors": 0,
-                "duration": round(time.time() - t0, 2),
-            }
         # create the sink table on demand (the batch path's _write_lake
         # does this; the stream's apply_batch only load()s) so a fresh
         # machine can run examples/binlog_stream_to_lake.json directly,

@@ -14,6 +14,9 @@ The replay pipeline is:
            ──to_changes──► (_op = DELETE | UPSERT, payload from ``after``)
            ──LakeTable.merge / append_delta──► committed snapshot
 
+The last three steps are :func:`commit_window`, shared by every lake
+consumer of a change window.
+
 ``keep_last`` runs BEFORE the merge so a 10^10-event replay reduces to
 |keys| rows in one partial-agg shuffle; the merge join then touches each
 key once.
@@ -218,6 +221,59 @@ def restore_filter(events: DataFrame, resume_offsets: dict) -> DataFrame:
     return events.filter(F.col("offset") > F.coalesce(hw, F.lit(-1)))
 
 
+def commit_window(
+    data: DataFrame,
+    table: LakeTable,
+    batch_id: str | None,
+    offsets: dict | None,
+    mode: str = "cow",
+    update_mode: str = "replace",
+    wap_id: str | None = None,
+    winners: DataFrame | None = None,
+) -> dict:
+    """Commit one admitted change window — the one place every lake
+    consumer (``replay``, the replay / multi-table streams and the
+    fan-out's lake legs) turns a window into a commit.
+
+    ``data`` holds the admitted data rows (no control rows) and
+    ``table`` already carries the window's DDL. ``offsets`` is the
+    admission's FormatState map, recorded with a ``numRead`` metric;
+    ``None`` records neither.
+
+    update_mode='patch' (cow only) applies the reference's UPDATE write
+    mode: every event becomes a sparse change row (null = unchanged) and
+    the merge folds last-non-null per column — so keep_last must NOT run
+    here (it would discard columns earlier events set); the fold happens
+    inside the merge (fold_patch_rows). Every other window folds to one
+    survivor per key with keep_last, unless the caller passes the
+    already-folded ``winners`` (the fan-out shares one fold across
+    sinks). mode='cow' merges, rewriting touched buckets; mode='mor'
+    appends a delta.
+
+    wap_id: stage the commit for write-audit-publish instead of making
+    it current (LakeTable WAP surface).
+    """
+    if update_mode == "patch":
+        if mode != "cow":
+            raise ValueError("update_mode='patch' requires mode='cow'")
+        changes = to_changes(events_with_pk(data, table.pk))
+    else:
+        if winners is None:
+            winners = keep_last(events_with_pk(data, table.pk), pk=table.pk,
+                                order=("op_ts", "seq"))
+        changes = to_changes(winners)
+    metrics = None
+    if offsets is not None:
+        metrics = {"numRead": sum(v["n"] for v in offsets.values())}
+    if mode == "cow":
+        return table.merge(changes, batch_id=batch_id, offsets=offsets,
+                           extra_metrics=metrics,
+                           assume_unique_keys=update_mode != "patch",
+                           update_mode=update_mode, wap_id=wap_id)
+    return table.append_delta(changes, batch_id=batch_id, offsets=offsets,
+                              extra_metrics=metrics, wap_id=wap_id)
+
+
 def replay(
     events: DataFrame,
     table: LakeTable,
@@ -229,51 +285,23 @@ def replay(
 ) -> dict:
     """Full batch replay: admit the window like a stream micro-batch
     (poison raises before anything commits), apply its DDL events first
-    (schema evolution, all backward compatible), then dedup to last-per-key and run one
-    idempotent merge.
+    (schema evolution, all backward compatible), then commit the data
+    rows through :func:`commit_window` (``mode`` / ``update_mode`` /
+    ``wap_id`` as there).
 
-    mode='cow' rewrites touched buckets (read-optimized result);
-    mode='mor' appends a delta (ingest-optimized, resolve at read).
-
-    update_mode='patch' (cow only) applies the reference's UPDATE write
-    mode: every event becomes a sparse change row (null = unchanged) and
-    the merge folds last-non-null per column — so keep_last must NOT run
-    here (it would discard columns earlier events set); the fold happens
-    inside the merge (fold_patch_rows).
-
-    wap_id: stage the DATA commit for write-audit-publish instead of
-    making it current (LakeTable WAP surface). DDL events in the batch
-    still commit immediately — schema evolution is metadata-only,
-    backward compatible, and allocates ids append-only, so an abandoned
-    staged batch leaves at most an unused schema version, never wrong
-    data.
+    DDL events in the batch commit immediately even under ``wap_id`` —
+    schema evolution is metadata-only, backward compatible, and
+    allocates ids append-only, so an abandoned staged batch leaves at
+    most an unused schema version, never wrong data.
     """
     from chunjun_spark.operators.ddl import apply_ddl_events
 
     events, ddl_rows, offsets, _, _ = admit_batch_with_offsets(events)
     if ddl_rows:
         table = apply_ddl_events(table, ddl_rows)
-    keyed = events_with_pk(events, table.pk)
-    metrics = None
-    if record_offsets:
-        metrics = {"numRead": sum(v["n"] for v in offsets.values())}
-    else:
-        offsets = None
-    if update_mode == "patch":
-        if mode != "cow":
-            raise ValueError("update_mode='patch' requires mode='cow'")
-        changes = to_changes(keyed)
-        return table.merge(changes, batch_id=batch_id, offsets=offsets,
-                           extra_metrics=metrics, assume_unique_keys=False,
-                           update_mode="patch", wap_id=wap_id)
-    survivors = keep_last(keyed, pk=table.pk, order=("op_ts", "seq"))
-    changes = to_changes(survivors)
-    if mode == "cow":
-        return table.merge(changes, batch_id=batch_id, offsets=offsets,
-                           extra_metrics=metrics, assume_unique_keys=True,
-                           wap_id=wap_id)
-    return table.append_delta(changes, batch_id=batch_id, offsets=offsets,
-                              extra_metrics=metrics, wap_id=wap_id)
+    return commit_window(events, table, batch_id,
+                         offsets if record_offsets else None,
+                         mode=mode, update_mode=update_mode, wap_id=wap_id)
 
 
 def events_with_pk(events: DataFrame, pk: list[str]) -> DataFrame:

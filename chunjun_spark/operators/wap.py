@@ -67,6 +67,28 @@ def audit_snapshot(table: LakeTable, checks: list[dict]) -> dict:
     return {"passed": not violations, "violations": violations, "row_count": n}
 
 
+def audit_gate(
+    table: LakeTable, wap_id: str, checks: list[dict], rebase: bool = False,
+) -> tuple[dict, int, dict | None]:
+    """The WAP gate shared by ``replay_wap`` and the replay stream's
+    audited micro-batches: audit the staged snapshot ``wap_id``, then
+    publish it on pass or abandon it on fail. Returns ``(report,
+    n_changes, published)``: the audit report, the staged commit's
+    ``numWrite``, and ``publish_staged``'s result (``None`` when the
+    stage was abandoned)."""
+    staged = LakeTable.load_staged(table.spark, table.root, wap_id)
+    report = audit_snapshot(staged, checks)
+    n_changes = (
+        staged.manifest["lineage"].get(wap_id, {})
+        .get("metrics", {}).get("numWrite", 0)
+    )
+    t = table.refresh()
+    if report["passed"]:
+        return report, n_changes, t.publish_staged(wap_id, rebase=rebase)
+    t.abandon_staged(wap_id)
+    return report, n_changes, None
+
+
 def replay_wap(
     events,
     table: LakeTable,
@@ -77,13 +99,13 @@ def replay_wap(
     rebase: bool = False,
 ) -> dict:
     """One-call write-audit-publish replay: stage the window under
-    ``wap_id=batch_id``, audit the staged snapshot, publish on pass /
-    abandon on fail. Returns the audit report plus the outcome
-    (``published`` / ``abandoned`` / ``skipped`` for an already-committed
-    batch). Crash-safe at every boundary: a crash before the stage
-    completes leaves only unreferenced garbage; between stage and
-    publish it leaves an invisible staged snapshot, and the re-run
-    detects it (``staged_ids``) and resumes at the audit step instead of
+    ``wap_id=batch_id``, then pass it through :func:`audit_gate`.
+    Returns the audit report plus the outcome (``published`` /
+    ``abandoned`` / ``skipped`` for an already-committed batch).
+    Crash-safe at every boundary: a crash before the stage completes
+    leaves only unreferenced garbage; between stage and publish it
+    leaves an invisible staged snapshot, and the re-run detects it
+    (``staged_ids``) and resumes at the audit step instead of
     re-staging; after publish the batch-id guard makes the whole re-run
     a no-op.
 
@@ -102,39 +124,25 @@ def replay_wap(
             table.abandon_staged(batch_id)
         return {"outcome": "skipped", "batch_id": batch_id,
                 "ran_action": False}
-    spark = table.spark
-    ran_action = False
-    if batch_id in table.staged_ids():
-        # resumed after a crash between stage and publish/abandon:
-        # re-audit the existing staged snapshot instead of re-staging
-        staged = LakeTable.load_staged(spark, table.root, batch_id)
-    else:
-        replay(events, table, batch_id=batch_id, mode=mode,
-               update_mode=update_mode, wap_id=batch_id)
-        staged = LakeTable.load_staged(spark, table.root, batch_id)
-        ran_action = True
-    report = audit_snapshot(staged, checks)
-    # both paths: the staged commit recorded its own lineage entry
-    n_changes = (
-        staged.manifest["lineage"].get(batch_id, {})
-        .get("metrics", {}).get("numWrite", 0)
-    )
-    t = table.refresh()
     # ran_action tells callers observing the INPUT frame (run_job's
     # numRead Observation) whether any Spark action evaluated it this
-    # call: the resume-from-stage path audits the staged snapshot
-    # instead and would leave such an observation waiting forever.
-    if report["passed"]:
-        res = t.publish_staged(batch_id, rebase=rebase)
-        if res.get("skipped"):
-            # a concurrent writer landed this very batch id between the
-            # stage and the publish — exactly-once degrades to the skip
-            return {"outcome": "skipped", "batch_id": batch_id,
-                    "ran_action": ran_action, **report}
-        return {"outcome": "published", "version": res["version"],
-                "batch_id": batch_id, "n_changes": n_changes,
-                "ran_action": ran_action, "rebased": bool(res.get("rebased")),
-                **report}
-    t.abandon_staged(batch_id)
-    return {"outcome": "abandoned", "batch_id": batch_id,
-            "n_changes": n_changes, "ran_action": ran_action, **report}
+    # call: resumed after a crash between stage and publish/abandon,
+    # the gate re-audits the existing staged snapshot instead and would
+    # leave such an observation waiting forever.
+    ran_action = batch_id not in table.staged_ids()
+    if ran_action:
+        replay(events, table, batch_id=batch_id, mode=mode,
+               update_mode=update_mode, wap_id=batch_id)
+    report, n_changes, res = audit_gate(table, batch_id, checks, rebase)
+    if res is None:
+        return {"outcome": "abandoned", "batch_id": batch_id,
+                "n_changes": n_changes, "ran_action": ran_action, **report}
+    if res.get("skipped"):
+        # a concurrent writer landed this very batch id between the
+        # stage and the publish — exactly-once degrades to the skip
+        return {"outcome": "skipped", "batch_id": batch_id,
+                "ran_action": ran_action, **report}
+    return {"outcome": "published", "version": res["version"],
+            "batch_id": batch_id, "n_changes": n_changes,
+            "ran_action": ran_action, "rebased": bool(res.get("rebased")),
+            **report}

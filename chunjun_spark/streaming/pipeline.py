@@ -25,6 +25,7 @@ totally-ordered Snowflake ts within one source.
 
 from __future__ import annotations
 
+import math
 import os
 
 import pyspark.sql.functions as F
@@ -38,9 +39,9 @@ from chunjun_spark.operators.merge import (  # noqa: F401
     POISON_OPS,
     InBandFailure,
     admit_batch_with_offsets,
+    commit_window,
     events_with_pk,
     null_pk_pred,
-    to_changes,
 )
 from chunjun_spark.plans.lake import LakeTable
 from chunjun_spark.sources.binlog import EVENT_SCHEMA
@@ -89,19 +90,6 @@ def read_binlog_stream_json(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(binlog_dir)
     )
-
-
-def files_per_trigger_for_rate(
-    bytes_per_sec: int, avg_file_bytes: int, trigger_sec: float
-) -> int:
-    """Translate the reference's global byte-rate budget into the file
-    source's rate knob: ``speed.bytes`` (-1 = unlimited) drove a Guava
-    RateLimiter adjusted from observed bytes/row each second
-    (ByteRateLimiter.java:56-101); with size-bounded segment files the
-    equivalent is files-per-trigger ≈ budget × trigger ÷ file size."""
-    if bytes_per_sec <= 0:
-        return 1_000_000  # unlimited
-    return max(1, int(bytes_per_sec * trigger_sec / max(1, avg_file_bytes)))
 
 
 class ByteRateLimiter:
@@ -481,10 +469,11 @@ def start_replay_stream(
             batch_df, dirty_pk=table.pk if fused_dirty else None,
             poison_ops=("ERROR",) if allow_dec else POISON_OPS,
         )
+        n_read = sum(v["n"] for v in offsets.values())
         if dirty:
             # the error RATIO is over the query's lifetime reads, so the
             # denominator advances on clean batches too
-            dirty_totals["read"] += sum(v["n"] for v in offsets.values())
+            dirty_totals["read"] += n_read
         if n_dirty:
             _capture_dirty(batch_df, table.pk, n_dirty)
             batch_df = batch_df.filter(~null_pk_pred(table.pk))
@@ -506,53 +495,29 @@ def start_replay_stream(
             if n_dirty_post:
                 _capture_dirty(batch_df, table.pk, n_dirty_post)
                 batch_df = batch_df.filter(~null_pk_pred(table.pk))
-        keyed = events_with_pk(batch_df, table.pk)
-        if update_mode == "patch":
-            changes = to_changes(keyed)  # fold happens inside the merge
-        else:
-            survivors = keep_last(keyed, pk=table.pk, order=("op_ts", "seq"))
-            changes = to_changes(survivors)
-        metrics = {"numRead": sum(v["n"] for v in offsets.values())}
+        # with audits: per-micro-batch write-audit-publish
+        # (operators/wap.py; ErrorLimiter.java:62-97 lifted to snapshot
+        # granularity) — stage under wap_id=bid (invisible), then the
+        # shared gate audits the staged snapshot and publishes it
+        # atomically or abandons it, failing the query. A crash between
+        # stage and publish re-delivers the batch, finds the stage, and
+        # resumes at the audit step; after an abandon the re-delivered
+        # batch re-stages and fails the same audit — terminal by design,
+        # bad data needs an upstream fix, exactly like the reference's
+        # error caps.
+        if not (audits and bid in table.staged_ids()):
+            commit_window(batch_df, table, bid, offsets, mode=mode,
+                          update_mode=update_mode,
+                          wap_id=bid if audits else None)
         if audits:
-            # per-micro-batch write-audit-publish (operators/wap.py;
-            # ErrorLimiter.java:62-97 lifted to snapshot granularity):
-            # stage under wap_id=bid (invisible), audit the staged
-            # snapshot, publish atomically / abandon + fail the query.
-            # A crash between stage and publish re-delivers the batch,
-            # finds the stage, and resumes at the audit step; after an
-            # abandon the re-delivered batch re-stages and fails the
-            # same audit — terminal by design, bad data needs an
-            # upstream fix, exactly like the reference's error caps.
-            from chunjun_spark.operators.wap import audit_snapshot
+            from chunjun_spark.operators.wap import audit_gate
 
-            if bid not in table.staged_ids():
-                if mode == "cow":
-                    table.merge(changes, batch_id=bid, offsets=offsets,
-                                extra_metrics=metrics,
-                                assume_unique_keys=update_mode != "patch",
-                                update_mode=update_mode, wap_id=bid)
-                else:
-                    table.append_delta(changes, batch_id=bid,
-                                       offsets=offsets,
-                                       extra_metrics=metrics, wap_id=bid)
-            staged = LakeTable.load_staged(spark, table_root, bid)
-            rep = audit_snapshot(staged, audits)
-            t = table.refresh()
-            if not rep["passed"]:
-                t.abandon_staged(bid)
+            rep, _, published = audit_gate(table, bid, audits)
+            if published is None:
                 raise MicroBatchAuditFailure(
                     f"micro-batch {bid} failed its audits; staged "
                     f"snapshot abandoned: {rep['violations']}"
                 )
-            t.publish_staged(bid)
-        elif mode == "cow":
-            table.merge(changes, batch_id=bid, offsets=offsets,
-                        extra_metrics=metrics,
-                        assume_unique_keys=update_mode != "patch",
-                        update_mode=update_mode)
-        else:
-            table.append_delta(changes, batch_id=bid, offsets=offsets,
-                               extra_metrics=metrics)
         if mode == "mor" and compact_every is not None:
             t2 = table.refresh()
             n_deltas = len(t2.manifest["deltas"])
@@ -572,7 +537,7 @@ def start_replay_stream(
             elif n_deltas >= compact_every:
                 t2.compact()
         if rate_limiter is not None:
-            rate_limiter.observe_rows(metrics["numRead"], batch_df)
+            rate_limiter.observe_rows(n_read, batch_df)
         _sync_scd2(batch_df, bid, table)
         _sync_views()
 
@@ -666,15 +631,7 @@ def start_multi_table_stream(
                 # per-table decode against THAT table's post-DDL schema —
                 # heterogeneous payloads share one fixed wire schema
                 sub = decode_json_events(sub, table.schema.to_struct())
-            keyed = events_with_pk(sub, table.pk)
-            survivors = keep_last(keyed, pk=table.pk, order=("op_ts", "seq"))
-            changes = to_changes(survivors)
-            offsets = offsets_by_table.get(name, {})
-            if mode == "cow":
-                table.merge(changes, batch_id=bid, offsets=offsets,
-                            assume_unique_keys=True)
-            else:
-                table.append_delta(changes, batch_id=bid, offsets=offsets)
+            commit_window(sub, table, bid, offsets_by_table[name], mode=mode)
 
     return (
         events.writeStream.foreachBatch(apply_batch)
@@ -682,78 +639,6 @@ def start_multi_table_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-# re-exported for compatibility: DDL forwarding is JDBC-plane logic and
-# lives beside the changelog apply (both the batch writeMode=cdc path
-# and this streaming relay use it)
-from chunjun_spark.sources.jdbc_live import (  # noqa: E402
-    relay_apply_ddl as _relay_apply_ddl,
-)
-
-
-def start_jdbc_relay_stream(
-    events: DataFrame,
-    url: str,
-    table: str,
-    checkpoint_dir: str,
-    job_id: str,
-    pk: list[str],
-    driver: str | None = None,
-    user: str | None = None,
-    password: str | None = None,
-    batch_size: int = 1000,
-    trigger_available_now: bool = True,
-    metrics_out: dict | None = None,
-) -> StreamingQuery:
-    """Continuous binlog → JDBC mart relay — the reference's primary
-    deployment shape (binlogreader → jdbcwriter under
-    ``semantic=exactly-once``; BinlogInputFormat → JdbcOutputFormat with
-    the XA commit protocol). Each micro-batch is admitted through the
-    fused narrow pre-pass, folded to its net per-key effect (keep_last
-    over (op_ts, seq)), and applied to the target database in ONE
-    audited transaction keyed by the micro-batch id: DELETE winners
-    delete, the rest upsert. A restart re-delivering a committed batch
-    hits the audit-marker skip — end-to-end exactly once without the
-    target being a lake.
-
-    add_column DDL is forwarded as an idempotent ALTER TABLE; any other
-    DDL action fails the query loudly (see _relay_apply_ddl).
-    """
-    from chunjun_spark.sources.jdbc_live import (
-        apply_changelog_jdbc_exactly_once,
-    )
-
-    spark = events.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df, ddl_rows, offsets, _, _ = admit_batch_with_offsets(batch_df)
-        if ddl_rows:
-            _relay_apply_ddl(spark, url, table, ddl_rows,
-                             driver, user, password)
-        res = apply_changelog_jdbc_exactly_once(
-            batch_df, url, table, job_id=job_id, batch_id=str(batch_id),
-            pk=pk, driver=driver, user=user, password=password,
-            batch_size=batch_size,
-        )
-        if metrics_out is not None:
-            # reference metric plane: numRead counts each batch once —
-            # a replayed (skipped) batch was already counted
-            metrics_out["numBatches"] = metrics_out.get("numBatches", 0) + 1
-            if not res.get("skipped"):
-                n = sum(v["n"] for v in offsets.values())
-                metrics_out["numRead"] = metrics_out.get("numRead", 0) + n
-                metrics_out["numWrite"] = (
-                    metrics_out.get("numWrite", 0) + res.get("n_changes", 0)
-                )
-
-    w = (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def start_fanout_stream(
@@ -789,7 +674,11 @@ def start_fanout_stream(
       {"type": "lake", "root": ..., "mode": "cow"|"mor",
        "update_mode": "replace"|"patch"}
       {"type": "jdbc", "url": ..., "table": ..., "pk": [...],
-       "driver": ..., "user": ..., "password": ..., "batch_size": N}
+       "driver": ..., "user": ..., "password": ..., "batch_size": N,
+       "staging_table": ...}
+
+    One jdbc sink alone is the binlog → database relay (the reference's
+    binlogreader → jdbcwriter deployment).
 
     DDL routing per sink type: lake sinks run the full schema-evolution
     set (idempotent ``apply_ddl_events``); jdbc sinks forward
@@ -806,10 +695,9 @@ def start_fanout_stream(
     exactly-once guards — a foreign system can't join the catalog swap.
     Sink tables register under ``sink["name"]`` (default ``lake_{i}``).
     """
-    from chunjun_spark.operators.dedup import keep_last
-    from chunjun_spark.operators.merge import events_with_pk, to_changes
     from chunjun_spark.sources.jdbc_live import (
         apply_changelog_jdbc_exactly_once,
+        relay_apply_ddl,
     )
 
     if not sinks:
@@ -907,28 +795,19 @@ def start_fanout_stream(
                     continue
                 if ddl_rows:
                     table = apply_ddl_events(table, ddl_rows)
-                patch = s.get("update_mode", "replace") == "patch"
-                if patch:
-                    # patch folds inside the merge (earlier events still
-                    # contribute the columns only they set) — a keep_last
-                    # pre-fold would drop them
-                    changes = to_changes(events_with_pk(batch_df, table.pk))
-                else:
-                    changes = to_changes(winners_for(table.pk))
+                update_mode = s.get("update_mode", "replace")
+                # patch folds inside the merge (earlier events still
+                # contribute the columns only they set) — the shared
+                # keep_last winners would drop them
+                winners = (None if update_mode == "patch"
+                           else winners_for(table.pk))
 
-                def _apply_lake(t_, wap=None, s=s, changes=changes,
-                                patch=patch):
-                    if s.get("mode", "cow") == "cow":
-                        return t_.merge(
-                            changes, batch_id=bid, offsets=offsets,
-                            extra_metrics={"numRead": n_read},
-                            assume_unique_keys=not patch,
-                            update_mode=s.get("update_mode", "replace"),
-                            wap_id=wap,
-                        )
-                    return t_.append_delta(
-                        changes, batch_id=bid, offsets=offsets,
-                        extra_metrics={"numRead": n_read}, wap_id=wap,
+                def _apply_lake(t_, wap=None, s=s, update_mode=update_mode,
+                                winners=winners):
+                    return commit_window(
+                        batch_df, t_, bid, offsets,
+                        mode=s.get("mode", "cow"), update_mode=update_mode,
+                        wap_id=wap, winners=winners,
                     )
 
                 if txn is not None:
@@ -999,7 +878,7 @@ def start_fanout_stream(
                         )
             else:
                 if ddl_rows:
-                    _relay_apply_ddl(
+                    relay_apply_ddl(
                         spark, s["url"], s["table"], ddl_rows,
                         s.get("driver"), s.get("user"), s.get("password"),
                     )
@@ -1061,23 +940,14 @@ def run_stream_with_restart(
     ``start_query`` is a zero-arg callable returning a fresh
     StreamingQuery against the SAME checkpoint dir; restarts resume from
     it, and the idempotent merge makes replayed micro-batches no-ops, so
-    a crash between commit and checkpoint cannot double-apply."""
-    import time as _time
-
-    last = None
-    for _attempt in range(max_attempts):
-        q = start_query()
-        try:
-            if not q.awaitTermination(timeout_sec):
-                q.stop()
-                raise TimeoutError("stream did not drain in time")
-            return
-        except TimeoutError:
-            raise
-        except Exception as e:  # noqa: BLE001 — restart any query failure
-            last = e
-            _time.sleep(delay_sec)
-    raise RuntimeError(f"stream failed after {max_attempts} attempts") from last
+    a crash between commit and checkpoint cannot double-apply. It is the
+    failure-rate loop with an unbounded interval: the ``max_attempts``-th
+    failure gives up."""
+    run_stream_with_failure_rate_restart(
+        start_query, max_failures_per_interval=max_attempts,
+        failure_interval_sec=math.inf, delay_sec=delay_sec,
+        timeout_sec=timeout_sec,
+    )
 
 
 def run_stream_with_failure_rate_restart(
@@ -1126,7 +996,8 @@ def run_stream_with_failure_rate_restart(
             # interval means no restart), not at N+1
             if len(fail_times) >= max_failures_per_interval:
                 raise RuntimeError(
-                    f"stream failed {len(fail_times)} times within "
+                    f"stream failed after {restarts + 1} attempts: "
+                    f"{len(fail_times)} failures within "
                     f"{failure_interval_sec}s (bound "
                     f"{max_failures_per_interval}) — giving up"
                 ) from e

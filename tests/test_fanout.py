@@ -15,7 +15,11 @@ from chunjun_spark.sources.binlog import (
     generate_binlog,
     write_binlog_files,
 )
-from chunjun_spark.sources.jdbc_live import DERBY_DRIVER, execute_sql
+from chunjun_spark.sources.jdbc_live import (
+    DERBY_DRIVER,
+    execute_sql,
+    query_scalar,
+)
 from chunjun_spark.streaming.pipeline import (
     read_binlog_stream,
     start_fanout_stream,
@@ -173,13 +177,11 @@ def test_fanout_validation(spark, tmp_root):
                   "update_mode": "patch"}], tmp_root + "/c", "j")
 
 
-@pytest.mark.parametrize("hook", ["preSql", "postSql"])
-def test_fanout_jdbc_sink_refuses_sql_hooks(spark, tmp_root, hook):
-    """A fan-out jdbc writer carrying preSql/postSql fails at config
-    time: the fan-out runs no per-sink statements, so they would be
-    skipped silently."""
-    jdbc = {"url": "jdbc:derby:memory:unused", "table": "mart",
-            "updateKey": PK, hook: ["DELETE FROM mart"]}
+def test_fanout_job_refuses_restore_from_lineage(spark, tmp_root):
+    """restoreFromLineage on a fan-out job fails at config time, before
+    any stream starts: only a single lake sink keeps the per-partition
+    offsets a lineage restore seeks to."""
+    ckpt = os.path.join(tmp_root, "ckpt")
     job = {"job": {
         "content": [{
             "reader": {"name": "binlogreader",
@@ -187,13 +189,17 @@ def test_fanout_jdbc_sink_refuses_sql_hooks(spark, tmp_root, hook):
             "writer": [
                 {"name": "hudiwriter",
                  "parameter": {"path": os.path.join(tmp_root, "lake")}},
-                {"name": "jdbcwriter", "parameter": jdbc},
+                {"name": "jdbcwriter",
+                 "parameter": {"url": "jdbc:derby:memory:unused",
+                               "table": "mart", "updateKey": PK}},
             ],
         }],
-        "setting": {"restore": {"isStream": True}},
+        "setting": {"restore": {"isStream": True, "checkpointDir": ckpt,
+                                "restoreFromLineage": True}},
     }}
-    with pytest.raises(ValueError, match=hook):
+    with pytest.raises(ValueError, match="restoreFromLineage"):
         run_job(spark, job)
+    assert not os.path.exists(ckpt) and not spark.streams.active
 
 
 def test_fanout_job_json_two_lakes_and_mart(spark, tmp_root):
@@ -204,6 +210,9 @@ def test_fanout_job_json_two_lakes_and_mart(spark, tmp_root):
     ev, binlog = _fixture(spark, tmp_root, n=3000, n_keys=400)
     url = _db("fanout3")
     _mk_target(spark, url, "mart")
+    execute_sql(spark, url, ["CREATE TABLE PRE_LOG (N INT)",
+                             "CREATE TABLE POST_LOG (N INT)"],
+                driver=DERBY_DRIVER)
     cow_root = os.path.join(tmp_root, "cow")
     mor_root = os.path.join(tmp_root, "mor")
     for root in (cow_root, mor_root):
@@ -223,7 +232,11 @@ def test_fanout_job_json_two_lakes_and_mart(spark, tmp_root):
                     {"name": "jdbcwriter",
                      "parameter": {"url": url, "table": "mart",
                                    "driver": DERBY_DRIVER,
-                                   "updateKey": PK}},
+                                   "updateKey": PK,
+                                   "preSql": ["INSERT INTO PRE_LOG "
+                                              "VALUES (1)"],
+                                   "postSql": ["INSERT INTO POST_LOG "
+                                               "VALUES (1)"]}},
                     {"name": "kafkawriter",
                      "parameter": {"topic": topic, "updateKey": PK}},
                 ],
@@ -245,6 +258,9 @@ def test_fanout_job_json_two_lakes_and_mart(spark, tmp_root):
         want_hash = want_hash or h
         assert h == want_hash
     assert _jdbc_state(spark, url, "mart") == _expected_final(spark, ev)
+    for log in ("PRE_LOG", "POST_LOG"):  # each hook ran exactly once
+        assert query_scalar(spark, url, f"SELECT COUNT(*) FROM {log}",
+                            driver=DERBY_DRIVER) == 1
     assert m["numRead"] == ev.count()
     assert m["nErrors"] == 0
     # the kafkawriter leg relayed every batch's winners to the topic

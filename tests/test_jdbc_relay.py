@@ -114,11 +114,12 @@ def test_job_json_cdc_write_mode(spark, tmp_root):
 
 
 def test_streaming_relay_matches_batch_fold_and_resumes(spark, tmp_root):
-    """File-backed binlog → streaming relay into Derby: final target
-    state equals the one-shot fold; a restarted query over the same
-    checkpoint re-delivers nothing (audit markers make replays no-ops)."""
+    """File-backed binlog → streaming relay (a one-jdbc-sink fan-out)
+    into Derby: final target state equals the one-shot fold; a restarted
+    query over the same checkpoint re-delivers nothing (audit markers
+    make replays no-ops)."""
     from chunjun_spark.sources.binlog import write_binlog_files
-    from chunjun_spark.streaming.pipeline import start_jdbc_relay_stream
+    from chunjun_spark.streaming.pipeline import start_fanout_stream
 
     url = _db("relay3")
     _mk_target(spark, url)
@@ -126,13 +127,13 @@ def test_streaming_relay_matches_batch_fold_and_resumes(spark, tmp_root):
     binlog = os.path.join(tmp_root, "rbinlog")
     write_binlog_files(ev, binlog, n_files=4)
     want = _expected_final(spark, ev)
+    sinks = [{"type": "jdbc", "url": url, "table": "tgt",
+              "pk": ["repo", "path"], "driver": DERBY_DRIVER}]
 
     events = (spark.readStream.schema(ev.schema)
               .option("maxFilesPerTrigger", 1).parquet(binlog))
     ckpt = os.path.join(tmp_root, "rckpt")
-    q = start_jdbc_relay_stream(events, url, "tgt", ckpt,
-                                job_id="rjob", pk=["repo", "path"],
-                                driver=DERBY_DRIVER)
+    q = start_fanout_stream(events, sinks, ckpt, job_id="rjob")
     assert q.awaitTermination(180)
     assert _target_state(spark, url) == want
     n_markers = query_scalar(
@@ -144,9 +145,7 @@ def test_streaming_relay_matches_batch_fold_and_resumes(spark, tmp_root):
     # restart over the same checkpoint: nothing new, state unchanged
     events2 = (spark.readStream.schema(ev.schema)
                .option("maxFilesPerTrigger", 1).parquet(binlog))
-    q2 = start_jdbc_relay_stream(events2, url, "tgt", ckpt,
-                                 job_id="rjob", pk=["repo", "path"],
-                                 driver=DERBY_DRIVER)
+    q2 = start_fanout_stream(events2, sinks, ckpt, job_id="rjob")
     assert q2.awaitTermination(180)
     assert _target_state(spark, url) == want
     assert int(query_scalar(
@@ -163,7 +162,7 @@ def test_relay_forwards_add_column_ddl_idempotently(spark, tmp_root):
 
     from pyspark.sql import types as T
 
-    from chunjun_spark.streaming.pipeline import _relay_apply_ddl
+    from chunjun_spark.sources.jdbc_live import relay_apply_ddl
 
     url = _db("relay4")
     _mk_target(spark, url)
@@ -173,18 +172,18 @@ def test_relay_forwards_add_column_ddl_idempotently(spark, tmp_root):
          "ddl": _json.dumps({"action": "add_column", "name": "stars",
                              "type": "int"})},
     ]
-    _relay_apply_ddl(spark, url, "tgt", rows, DERBY_DRIVER, None, None)
+    relay_apply_ddl(spark, url, "tgt", rows, DERBY_DRIVER, None, None)
     cols = (spark.read.format("jdbc").option("url", url)
             .option("dbtable", "tgt").option("driver", DERBY_DRIVER)
             .load().columns)
     assert "STARS" in cols
     # re-delivery: column exists -> skip, no error
-    _relay_apply_ddl(spark, url, "tgt", rows, DERBY_DRIVER, None, None)
+    relay_apply_ddl(spark, url, "tgt", rows, DERBY_DRIVER, None, None)
 
     bad = [{"op_ts": ts, "seq": 2,
             "ddl": _json.dumps({"action": "truncate_table"})}]
     with pytest.raises(ValueError, match="cannot apply DDL action"):
-        _relay_apply_ddl(spark, url, "tgt", bad, DERBY_DRIVER, None, None)
+        relay_apply_ddl(spark, url, "tgt", bad, DERBY_DRIVER, None, None)
 
 
 def test_relay_forwards_rename_widen_drop_ddl(spark, tmp_root):
@@ -310,11 +309,22 @@ def test_relay_widen_resumes_from_crash_states(spark, tmp_root):
     assert df.first()["STARS"] == 9 and "STARS__WIDEN" not in df.columns
 
 
-def test_streaming_relay_via_job_json(spark, tmp_root):
+def test_streaming_relay_via_job_json(spark, tmp_root, monkeypatch):
     """setting.restore.isStream + jdbcwriter: the job JSON drives the
     streaming relay end to end (the reference's realtime binlog →
-    database deployment in one config file)."""
+    database deployment in one config file), staging each micro-batch
+    in the writer's ``stagingTable``."""
+    import chunjun_spark.sources.jdbc_live as jl
     from chunjun_spark.sources.binlog import write_binlog_files
+
+    staged = set()
+    real_stage = jl._stage_frame
+
+    def stage(df, url, staging, props):
+        staged.add(staging)
+        real_stage(df, url, staging, props)
+
+    monkeypatch.setattr(jl, "_stage_frame", stage)
 
     url = _db("relay5")
     _mk_target(spark, url)
@@ -328,12 +338,14 @@ def test_streaming_relay_via_job_json(spark, tmp_root):
         "writer": {"name": "jdbcwriter", "parameter": {
             "url": url, "table": "tgt", "driver": DERBY_DRIVER,
             "writeMode": "cdc", "updateKey": ["repo", "path"],
+            "stagingTable": "relay_stage",
         }},
     }], "setting": {"restore": {
         "isStream": True, "isRestore": True,
         "checkpointDir": os.path.join(tmp_root, "jckpt"),
     }}}}
     m = run_job(spark, cfg)
+    assert staged == {"relay_stage", "relay_stage_del"}
     # numWrite = rows touched by this run's applies: >= final row count
     # (a key updated in several micro-batches counts once per touch)
     assert m["numWrite"] >= len(want)

@@ -1,4 +1,5 @@
-"""Multi-table routing, poison-pill failure, restart loop, rate knob."""
+"""Multi-table routing, poison-pill failure, restart loops, byte-rate
+limiter, Spark jobs per replay-stream micro-batch."""
 
 import datetime
 import os
@@ -263,12 +264,6 @@ def test_failure_rate_restart_burst_gives_up():
             delay_sec=0.0, _clock=lambda: clock["t"],
         )
     assert calls["n"] == 3  # the 3rd in-window failure trips the bound
-
-
-def test_files_per_trigger_for_rate():
-    assert pl.files_per_trigger_for_rate(-1, 1000, 1.0) == 1_000_000
-    assert pl.files_per_trigger_for_rate(10_000_000, 1_000_000, 1.0) == 10
-    assert pl.files_per_trigger_for_rate(100, 1_000_000, 1.0) == 1
 
 
 def test_byte_rate_limiter_throttles_to_budget():
@@ -668,3 +663,36 @@ def test_listener_render_valid_exposition_for_multiple_queries():
     assert len(samples) == 2
     assert any('query="alpha"' in s for s in samples)
     assert any('query="beta"' in s for s in samples)
+
+
+# Spark jobs of a two-micro-batch start_replay_stream run (local[4],
+# 4-bucket table, 300 events per micro-batch), measured (twice) before
+# the stream's commit moved into operators/merge.commit_window: cow 30
+# (15 per micro-batch), mor 16 (8 per micro-batch).
+_STREAM_JOB_BOUNDS = {"cow": 30, "mor": 16}
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_replay_stream_jobs_per_micro_batch(spark, tmp_root, mode):
+    """Each micro-batch of the replay stream runs at most its pinned
+    number of Spark jobs (the query's job group is its run id)."""
+    from chunjun_spark.sources.binlog import (
+        PAYLOAD_SCHEMA,
+        generate_binlog,
+        write_binlog_files,
+    )
+
+    ev = generate_binlog(spark, 600, n_keys=200, seed=5, dup_rate=0.2)
+    binlog = os.path.join(tmp_root, "binlog")
+    write_binlog_files(ev, binlog, n_files=2)
+    root = os.path.join(tmp_root, "lake")
+    LakeTable.create(spark, root, PAYLOAD_SCHEMA, pk=["repo", "path"],
+                     n_buckets=4)
+    q = pl.start_replay_stream(
+        pl.read_binlog_stream(spark, binlog, max_files_per_trigger=1),
+        root, os.path.join(tmp_root, "ckpt"), mode=mode,
+    )
+    assert q.awaitTermination(180)
+    assert len(LakeTable.load(spark, root).committed_batches()) == 2
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= _STREAM_JOB_BOUNDS[mode]
