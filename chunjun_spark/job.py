@@ -788,7 +788,7 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
         )
     p = cfg.reader.parameter
     sinks = []
-    jdbc_sinks = []  # (conn params, writer parameter) per jdbc sink
+    jdbc_sinks = []  # (url, credentials, writer parameter) per jdbc sink
     for w in cfg.writers:
         wp = w.parameter
         if w.name in _JDBC_WRITER_NAMES:
@@ -801,7 +801,9 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
                     "modes as batch jobs or sink to a lake"
                 )
             conn = _jdbc_conn_params(wp)
-            jdbc_sinks.append((conn, wp))
+            jdbc_sinks.append((conn["url"], {
+                k: conn[k] for k in ("driver", "user", "password")
+            }, wp))
             sinks.append({
                 "type": "jdbc", "url": conn["url"], "table": conn["table"],
                 "pk": wp.get("updateKey") or wp.get("pk"),
@@ -856,7 +858,7 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
     # a single-jdbcwriter relay keeps its own default checkpoint name,
     # so a deployed relay resumes from its existing source log
     kind = "relay" if len(sinks) == 1 and jdbc_sinks else "fanout"
-    for conn, wp in jdbc_sinks:
+    for url, common, wp in jdbc_sinks:
         if not wp.get("preSql"):
             continue
         # run-once-per-JOB, not per-attempt: a crash-restart resumes
@@ -865,11 +867,9 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
         # sink's audit table is the restart detector — any batch marker
         # for this job_id means the first attempt got past preSql
         # (markers commit atomically with each batch's rows).
-        common = {"driver": conn["driver"], "user": conn["user"],
-                  "password": conn["password"]}
-        ensure_audit_table(spark, conn["url"], **common)
-        if not any_batch_applied(spark, conn["url"], cfg.job_id, **common):
-            execute_sql(spark, conn["url"], list(wp["preSql"]), **common)
+        ensure_audit_table(spark, url, **common)
+        if not any_batch_applied(spark, url, cfg.job_id, **common):
+            execute_sql(spark, url, list(wp["preSql"]), **common)
     metrics: dict = {}
     q = start_fanout_stream(
         events, sinks,
@@ -882,11 +882,9 @@ def _run_fanout_stream(spark: SparkSession, cfg: JobConfig, t0: float) -> dict:
     if not q.awaitTermination(600):
         q.stop()
         raise TimeoutError("fan-out stream did not drain in time")
-    for conn, wp in jdbc_sinks:
+    for url, common, wp in jdbc_sinks:
         if wp.get("postSql"):
-            execute_sql(spark, conn["url"], list(wp["postSql"]),
-                        driver=conn["driver"], user=conn["user"],
-                        password=conn["password"])
+            execute_sql(spark, url, list(wp["postSql"]), **common)
     # relay metrics contract: numRead/numWrite count THIS run's applied
     # batches — replay-skips and lifetime lineage totals add zero
     return {
